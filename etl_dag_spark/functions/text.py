@@ -292,13 +292,6 @@ def md5_fingerprint_column(text: Column | str) -> Column:
     return F.md5(_col(text))
 
 
-def min_shingle_md5_column(text: Column | str, n: int = 3) -> Column:
-    """Near-dup sketch: lexicographic min of md5(shingle) — a 1-perm
-    MinHash whose hash function (md5) is portable across engines."""
-    sh = shingles_column(text, n)
-    return F.array_min(F.transform(sh, F.md5))
-
-
 def min_shingle_md5_sql(text_expr: str, n: int = 3) -> str:
     return f"list_min(list_transform({shingles_sql(text_expr, n)}, s -> md5(s)))"
 

@@ -68,15 +68,6 @@ def build_customer_dim(customer: DataFrame, nation: DataFrame) -> DataFrame:
     )
 
 
-def build_product_dim(part: DataFrame) -> DataFrame:
-    return part.select(
-        F.col("p_partkey").cast("bigint").alias("product_id"),
-        F.col("p_name").alias("product_name"),
-        F.col("p_brand").alias("category"),
-        (cents("p_retailprice") / 100.0).alias("price"),
-    )
-
-
 def date_dim(orders: DataFrame) -> DataFrame:
     """Generated date dimension over the observed o_orderdate range
     (sql_definitions.sql:184-190) — sequence()+explode, no driver loop,

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -113,10 +113,17 @@ def dq_report_sql(rules: tuple[Rule, ...] = DEFAULT_RULES) -> str:
     return "\nUNION ALL\n".join(selects)
 
 
-def split_valid(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
+def split_valid(
+    df: DataFrame, rules: list[Rule], observation: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
     """(valid, quarantined) split — the scalable version of the
     reference's raise-on-any-violation: bad rows are quarantined with the
-    list of failed rules instead of failing the whole load."""
+    list of failed rules instead of failing the whole load.
+
+    ``observation``, when given, is attached to the tagged frame before
+    the split, so the first action over either side also reports
+    ``rows`` (all input rows) and ``rejected`` (rows failing any rule)
+    without a separate count job."""
     failed = F.filter(
         F.array(
             *[
@@ -127,6 +134,12 @@ def split_valid(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFrame]
         lambda x: x.isNotNull(),
     )
     tagged = df.withColumn("__failed_rules", failed)
+    if observation is not None:
+        tagged = tagged.observe(
+            observation,
+            F.count(F.lit(1)).alias("rows"),
+            F.count(F.when(F.size("__failed_rules") > 0, 1)).alias("rejected"),
+        )
     valid = tagged.where(F.size("__failed_rules") == 0).drop("__failed_rules")
     invalid = tagged.where(F.size("__failed_rules") > 0)
     return valid, invalid

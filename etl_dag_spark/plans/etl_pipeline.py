@@ -10,11 +10,17 @@ Differences that matter at 100 TB (each one deliberate):
 
 - Reads are lazy Spark scans with explicit schemas (no inferSchema
   pass); renames are metadata-only projections.
-- Validation compiles to ONE aggregate scan per table instead of a
-  pandas boolean mask per rule.
-- ``strict=True`` reproduces the reference's raise-on-any-violation;
-  the default quarantines invalid rows to parquet and loads the rest —
-  a 100 TB load shouldn't be aborted by three bad rows.
+- Validation tags each row with its failed rules inside the pass that
+  writes it, instead of a pandas boolean mask per rule. The default
+  quarantines invalid rows to parquet and loads the rest (a 100 TB
+  load shouldn't be aborted by three bad rows): the target write reads
+  the table once and reports its loaded and rejected counts as
+  observed metrics, and only a table with rejects is read a second
+  time, by its quarantine write. A clean table's quarantine is
+  truncated with an empty frame, which reads nothing.
+- ``strict=True`` reproduces the reference's raise-on-any-violation.
+  It checks all three tables first, one aggregate per table, and
+  raises before anything is written.
 - Country normalization is a literal-map Column expression, not a
   per-row ``pycountry.search_fuzzy`` call.
 - The load step is idempotent ``mode("overwrite")`` parquet — rerunning
@@ -25,11 +31,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_dag_spark.functions.country import iso3_column
-from etl_dag_spark.operators.validation import Rule, require_columns, split_valid
+from etl_dag_spark.operators.validation import Rule, dq_report, require_columns, split_valid
 from etl_dag_spark.plans.dag import DAG, Task
 from etl_dag_spark.sources.readers import read_source
 from etl_dag_spark.sources.sinks import overwrite_parquet
@@ -111,7 +117,8 @@ def build_pipeline(
     set (warehouse credentials etc., ETL_DAG.py:52-53) — checked by the
     first task, before any Spark job runs.
     Outputs land under ``out_dir``: fact_table/, products/, customers/,
-    plus quarantine/<table>/ for rejected rows (non-strict mode)."""
+    plus quarantine/<table>/ with this run's rejected rows (empty for a
+    table without rejects, so after every strict run)."""
     dag = DAG("reference_etl")
 
     def load_env_vars(ctx: dict) -> dict:
@@ -141,26 +148,37 @@ def build_pipeline(
         ).withColumn("COUNTRY_ISO3", iso3_column("COUNTRY"))
 
         frames = {"sales": sales, "products": products, "customers": customers}
-        loaded: dict[str, int] = {}
         for name, df in frames.items():
             require_columns(df, REQUIRED[name])
-            valid, invalid = split_valid(df, RULES[name])
-            n_bad = invalid.count()
-            if n_bad and strict:
-                bad = invalid.select(
-                    F.explode("__failed_rules").alias("rule")
-                ).groupBy("rule").count().collect()
-                detail = ", ".join(f"{r.rule} ({r['count']} rows)" for r in bad)
-                raise ValueError(f"validation failed for {name}: {detail}")
-            if n_bad:
-                overwrite_parquet(invalid, os.path.join(out_dir, "quarantine", name))
+        if strict:
+            # every table is checked before any is written, so a failure
+            # leaves the previous load in place (one aggregate per table)
+            all_rules = tuple(r for rules in RULES.values() for r in rules)
+            bad = dq_report(frames, all_rules).where("violations > 0").collect()
+            for name in frames:
+                detail = [
+                    f"{r.rule_name} ({r.violations} rows)" for r in bad if r.table_name == name
+                ]
+                if detail:
+                    raise ValueError(f"validation failed for {name}: {', '.join(detail)}")
+        loaded: dict[str, int] = {}
+        for name, df in frames.items():
+            seen = Observation()
+            valid, invalid = split_valid(df, RULES[name], observation=seen)
             out = valid
             if name == "customers":
                 # reference replaces COUNTRY with the ISO3 code (ETL_DAG.py:193)
                 out = valid.withColumn("COUNTRY", F.col("COUNTRY_ISO3")).drop("COUNTRY_ISO3")
             target = "fact_table" if name == "sales" else name
             overwrite_parquet(out, os.path.join(out_dir, target))
-            loaded[name] = out.count()
+            counts = seen.get  # filled by the write above: no count job
+            loaded[name] = counts["rows"] - counts["rejected"]
+            # a clean table truncates its quarantine with an empty frame,
+            # which scans no input; otherwise the rejects are the second
+            # and last scan
+            if not counts["rejected"]:
+                invalid = spark.createDataFrame([], invalid.schema)
+            overwrite_parquet(invalid, os.path.join(out_dir, "quarantine", name))
         return loaded
 
     dag.add(Task("load_env_vars", load_env_vars))

@@ -922,9 +922,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = d.agg(F.max("doc_id")).first()[0] // 2
     first = dd.incremental_minhash_dedup(d.where(F.col("doc_id") <= mid), store, path=loc)
     second = dd.incremental_minhash_dedup(d.where(F.col("doc_id") > mid), store, path=loc)
-    # both halves are eagerly localCheckpoint-ed inside the operator
-    # (append path), so the union no longer reads the store — tear the
-    # per-run store down here rather than leaking a tmp dir per run
+    # neither half's plan reads the store any more (the driver-solved
+    # path carries store hits as literal values; the distributed path
+    # localCheckpoints before appending), so the union is safe after the
+    # teardown — drop the per-run store here rather than leak a tmp dir
     out = first.unionByName(second)
     spark.sql(f"DROP TABLE IF EXISTS {store}")
     shutil.rmtree(loc, ignore_errors=True)

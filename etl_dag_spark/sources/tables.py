@@ -10,6 +10,7 @@ into the parquet reader for whatever query consumes the table.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,18 +39,34 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # ``spark.read.schema(...)`` makes every later read of the same
 # unchanged path job-free (~0.04 s). This is METADATA, not data: no
 # rows, results, or intermediates are reused; the schema is re-derived
-# per process and invalidated by the file's mtime/size, and the
-# nanosAsLong flag is part of the key because it changes what Spark
-# infers for TIMESTAMP(NANOS) columns.
+# per process and invalidated by the file's mtime/size (every part
+# file's, for a directory dataset), and the nanosAsLong flag is part of
+# the key because it changes what Spark infers for TIMESTAMP(NANOS)
+# columns.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def _stat_key(path: str):
+    """(mtime, size) of ``path``; for a directory dataset also every
+    file under it, because a part file rewritten in place changes
+    neither the directory's mtime nor its size."""
     try:
         st = os.stat(path)
     except OSError:
         return None
-    return (st.st_mtime_ns, st.st_size)
+    key = (st.st_mtime_ns, st.st_size)
+    if not stat.S_ISDIR(st.st_mode):
+        return key
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for name in names:
+            full = os.path.join(root, name)
+            try:
+                fst = os.stat(full)
+            except OSError:  # removed while listing: the key differs anyway
+                continue
+            files.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return (key, tuple(sorted(files)))
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:

@@ -5,6 +5,7 @@ normalization, quarantine vs strict failure, idempotent reload."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -30,14 +31,31 @@ CUSTOMERS = """CustomerID,Name,Email,Country
 """
 
 
-@pytest.fixture()
-def csv_paths(tmp_path):
+def _clean(csv: str, bad_ids: set[str]) -> str:
+    """``csv`` without the rows whose first field is in ``bad_ids``."""
+    return "".join(
+        line for line in csv.splitlines(keepends=True) if line.split(",")[0] not in bad_ids
+    )
+
+
+CLEAN_SALES = _clean(SALES, {"3", "4"})
+CLEAN_PRODUCTS = _clean(PRODUCTS, {"102"})
+CLEAN_CUSTOMERS = _clean(CUSTOMERS, {"12", "13"})
+
+
+def _write_csvs(directory, sales, products, customers) -> dict[str, str]:
+    directory.mkdir(exist_ok=True)
     paths = {}
-    for name, content in [("sales", SALES), ("products", PRODUCTS), ("customers", CUSTOMERS)]:
-        p = tmp_path / f"{name}.csv"
+    for name, content in [("sales", sales), ("products", products), ("customers", customers)]:
+        p = directory / f"{name}.csv"
         p.write_text(content)
         paths[name] = str(p)
     return paths
+
+
+@pytest.fixture()
+def csv_paths(tmp_path):
+    return _write_csvs(tmp_path, SALES, PRODUCTS, CUSTOMERS)
 
 
 def test_pipeline_quarantines_and_loads(spark, csv_paths, tmp_path):
@@ -61,6 +79,55 @@ def test_pipeline_quarantines_and_loads(spark, csv_paths, tmp_path):
 def test_pipeline_strict_reproduces_reference_failure(spark, csv_paths, tmp_path):
     with pytest.raises(ValueError, match="validation failed for sales"):
         run_pipeline(spark, csv_paths, str(tmp_path / "wh2"), strict=True)
+
+
+def test_pipeline_strict_validates_every_table_before_writing(spark, tmp_path):
+    # clean sales load first in table order; a per-table check-then-write
+    # would already have written fact_table/ when products fails
+    paths = _write_csvs(tmp_path / "in", CLEAN_SALES, PRODUCTS, CLEAN_CUSTOMERS)
+    out = tmp_path / "wh_strict"
+    with pytest.raises(
+        ValueError, match=r"^validation failed for products: price_non_negative \(1 rows\)$"
+    ):
+        run_pipeline(spark, paths, str(out), strict=True)
+    assert not out.exists()
+
+
+def test_pipeline_strict_loads_clean_tables(spark, tmp_path):
+    paths = _write_csvs(tmp_path / "in", CLEAN_SALES, CLEAN_PRODUCTS, CLEAN_CUSTOMERS)
+    out = str(tmp_path / "wh_strict_ok")
+    ctx = run_pipeline(spark, paths, out, strict=True)
+    assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
+    assert spark.read.parquet(os.path.join(out, "fact_table")).count() == 2
+
+
+def test_clean_rerun_truncates_quarantine(spark, csv_paths, tmp_path):
+    out = str(tmp_path / "wh_rerun")
+    run_pipeline(spark, csv_paths, out)
+    assert spark.read.parquet(os.path.join(out, "quarantine", "sales")).count() == 2
+    clean = _write_csvs(tmp_path / "clean", CLEAN_SALES, CLEAN_PRODUCTS, CLEAN_CUSTOMERS)
+    ctx = run_pipeline(spark, clean, out)
+    assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
+    for table in ("sales", "products", "customers"):
+        q = spark.read.parquet(os.path.join(out, "quarantine", table))
+        assert q.count() == 0, table
+        assert "__failed_rules" in q.columns
+
+
+def test_load_runs_only_its_writes(spark, csv_paths, tmp_path):
+    # every fixture table has rejects, so each one is read by exactly two
+    # writes (valid rows, quarantine); the counts ride on the first write
+    sc = spark.sparkContext
+    group = f"etl-load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        ctx = run_pipeline(spark, csv_paths, str(tmp_path / "wh_jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 6, jobs
 
 
 def test_pipeline_is_idempotent_truncate_and_load(spark, csv_paths, tmp_path):

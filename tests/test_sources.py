@@ -260,3 +260,28 @@ def test_read_evolved_reconciles_schema_drift(spark, tmp_path):
     assert rows[1].amount == 10.0 and rows[1].region is None and rows[1].loaded == 1
     assert rows[2].amount == 20.5 and rows[2].region == "EU"
     assert rows[3].region == "NA" and not hasattr(rows[3], "legacy")
+
+
+def test_schema_memo_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A part file rewritten in place leaves its directory's mtime and
+    size as they were; the memo must still serve the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_dag_spark.sources.tables import read_parquet_cached_schema
+
+    ds = tmp_path / "ds"
+    ds.mkdir()
+    part = ds / "part-00000.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    assert read_parquet_cached_schema(spark, str(ds)).columns == ["a"]
+
+    before = os.stat(ds)
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), part)
+    os.utime(ds, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(ds)
+    assert (after.st_mtime_ns, after.st_size) == (before.st_mtime_ns, before.st_size)
+
+    df = read_parquet_cached_schema(spark, str(ds))
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
