@@ -1,7 +1,10 @@
-"""Recursive-hierarchy operators: Spark has no WITH RECURSIVE, so the
-reference's recursive CTEs (sql_definitions.sql:54-84 descendant
-expansion, :93-121 manager-chain concatenation) are re-expressed as
-iterative frontier joins to a fixpoint.
+"""Recursive-hierarchy operators: the reference's recursive CTEs
+(sql_definitions.sql:54-84 descendant expansion, :93-121 manager-chain
+concatenation) re-expressed as iterative frontier joins to a fixpoint.
+Spark 4 also runs WITH RECURSIVE natively: the registry's
+``sql_hierarchy_levels`` and ``sql_ancestor_chain`` run the reference's
+CTE text (``sql.HIERARCHY_LEVELS_SQL`` / ``sql.ANCESTOR_CHAIN_SQL``)
+against the same oracles as these operators.
 
 Scale design: each iteration is one distributed join of the current
 frontier against the (broadcastable or key-partitioned) edge set; the

@@ -67,7 +67,10 @@ class DAG:
         driver-side (a shuffle-heavy branch no longer blocks a scan
         branch). Failure semantics match Airflow: a failed branch's
         dependents never start, independent branches run to completion,
-        and the first error re-raises at the end.
+        and the first error re-raises at the end. Branch threads run
+        with the caller's Spark local properties (job group,
+        description, scheduler pool) and job tags, so their jobs stay
+        attributed to the caller.
 
         ``resume_dir`` enables resume-from-failure across PROCESS
         restarts (Airflow's retry-from-failed-task): each task that
@@ -97,10 +100,17 @@ class DAG:
         ts = TopologicalSorter(graph)
         ts.prepare()
         errors: list[tuple[str, BaseException]] = []
+
+        def submit(name: str):
+            # wrapped per submission: each branch gets its own copy of
+            # the caller's properties, so a branch that sets its own
+            # job group does not change another's
+            return pool.submit(_inherit_spark_properties(self._exec), name, context, resume_dir)
+
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             futures: dict = {}
             for name in ts.get_ready():
-                futures[pool.submit(self._exec, name, context, resume_dir)] = name
+                futures[submit(name)] = name
             while futures:
                 done_set, _pending = wait(futures, return_when=FIRST_COMPLETED)
                 for fut in done_set:
@@ -113,7 +123,7 @@ class DAG:
                     else:
                         ts.done(name)
                 for name in ts.get_ready():
-                    futures[pool.submit(self._exec, name, context, resume_dir)] = name
+                    futures[submit(name)] = name
         if errors:
             raise errors[0][1]
         return context
@@ -146,3 +156,23 @@ class DAG:
             with open(tmp, "w") as fh:
                 fh.write("ok")
             os.replace(tmp, marker)  # atomic: no half-written sentinel
+
+
+def _inherit_spark_properties(fn: Callable) -> Callable:
+    """``fn`` set to run with the calling thread's Spark local properties
+    and job tags, captured now. A pool thread is a fresh JVM thread under
+    PySpark's pinned-thread mode and would otherwise start with none. A
+    process without a live SparkContext gets ``fn`` back unchanged."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.getActiveSession()
+    if session is None:
+        # a thread the session was not made in has no active session:
+        # its local properties are still carried, its tags cannot be
+        return inheritable_thread_target(fn)
+    return inheritable_thread_target(session)(fn)

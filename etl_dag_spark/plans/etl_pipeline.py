@@ -1,10 +1,19 @@
 """The reference's complete ETL DAG (ETL_DAG.py:241-277), re-expressed
-Spark-first: ``load_env_vars → validate_files → load_data`` over the
-same three CSV sources (sales / products / customers), with the same
-column renames (ETL_DAG.py:169-187), the same data-quality checks
-(ETL_DAG.py:90-142), the same country→ISO3 normalization
-(ETL_DAG.py:144-151), and truncate-and-load semantics
+Spark-first over the same three CSV sources (sales / products /
+customers), with the same column renames (ETL_DAG.py:169-187), the same
+data-quality checks (ETL_DAG.py:90-142), the same country→ISO3
+normalization (ETL_DAG.py:144-151), and truncate-and-load semantics
 (ETL_DAG.py:210-229) into parquet star-schema tables.
+
+The task graph is ``load_env_vars → validate_files → [check_data,
+strict only] → load_sales | load_products | load_customers →
+load_data``. The three tables are independent, so each loads in its own
+DAG branch and ``run_pipeline`` runs the branches concurrently: their
+Spark jobs share the executors instead of waiting for one another, and
+they keep the caller's job group (``DAG.run``). ``load_data`` gathers
+the per-table loaded counts. A table whose load fails does not stop the
+other two; its error re-raises once they finish, and ``load_data``
+never runs.
 
 Differences that matter at 100 TB (each one deliberate):
 
@@ -19,8 +28,9 @@ Differences that matter at 100 TB (each one deliberate):
   time, by its quarantine write. A clean table's quarantine is
   truncated with an empty frame, which reads nothing.
 - ``strict=True`` reproduces the reference's raise-on-any-violation.
-  It checks all three tables first, one aggregate per table, and
-  raises before anything is written.
+  Its ``check_data`` task checks all three tables first, one aggregate
+  per table, and raises before any branch writes. It is not retried: a
+  violation is in the data, and a rerun would repeat every scan.
 - Country normalization is a literal-map Column expression, not a
   per-row ``pycountry.search_fuzzy`` call.
 - The load step is idempotent ``mode("overwrite")`` parquet — rerunning
@@ -40,32 +50,37 @@ from etl_dag_spark.plans.dag import DAG, Task
 from etl_dag_spark.sources.readers import read_source
 from etl_dag_spark.sources.sinks import overwrite_parquet
 
-# Column maps verbatim from ETL_DAG.py:169-187
-SALES_RENAME = {
-    "TransactionID": "TRANSACTION_ID",
-    "Date": "TRANSACTION_DATE",
-    "CustomerID": "CUSTOMER_ID",
-    "ProductID": "PRODUCT_ID",
-    "Amount": "AMOUNT",
-}
-PRODUCTS_RENAME = {
-    "ProductID": "PRODUCT_ID",
-    "ProductName": "PRODUCT_NAME",
-    "Category": "CATEGORY",
-    "Price": "PRICE",
-}
-CUSTOMERS_RENAME = {
-    "CustomerID": "CUSTOMER_ID",
-    "Name": "NAME",
-    "Email": "EMAIL",
-    "Country": "COUNTRY",
-}
+TABLES = ("sales", "products", "customers")
 
-SALES_SCHEMA = (
-    "TransactionID bigint, Date string, CustomerID bigint, ProductID bigint, Amount double"
-)
-PRODUCTS_SCHEMA = "ProductID bigint, ProductName string, Category string, Price double"
-CUSTOMERS_SCHEMA = "CustomerID bigint, Name string, Email string, Country string"
+# Column maps verbatim from ETL_DAG.py:169-187
+RENAMES = {
+    "sales": {
+        "TransactionID": "TRANSACTION_ID",
+        "Date": "TRANSACTION_DATE",
+        "CustomerID": "CUSTOMER_ID",
+        "ProductID": "PRODUCT_ID",
+        "Amount": "AMOUNT",
+    },
+    "products": {
+        "ProductID": "PRODUCT_ID",
+        "ProductName": "PRODUCT_NAME",
+        "Category": "CATEGORY",
+        "Price": "PRICE",
+    },
+    "customers": {
+        "CustomerID": "CUSTOMER_ID",
+        "Name": "NAME",
+        "Email": "EMAIL",
+        "Country": "COUNTRY",
+    },
+}
+SCHEMAS = {
+    "sales": (
+        "TransactionID bigint, Date string, CustomerID bigint, ProductID bigint, Amount double"
+    ),
+    "products": "ProductID bigint, ProductName string, Category string, Price double",
+    "customers": "CustomerID bigint, Name string, Email string, Country string",
+}
 
 # Required columns + checks verbatim from ETL_DAG.py:97-119 (post-rename)
 REQUIRED = {
@@ -111,7 +126,7 @@ def build_pipeline(
     strict: bool = False,
     required_env: list[str] | None = None,
 ) -> DAG:
-    """Assemble the three-task DAG. ``csv_paths`` needs keys
+    """Assemble the DAG (module docstring). ``csv_paths`` needs keys
     sales/products/customers (the reference's env vars CSV_*_PATH).
     ``required_env`` optionally lists environment variables that must be
     set (warehouse credentials etc., ETL_DAG.py:52-53) — checked by the
@@ -124,7 +139,7 @@ def build_pipeline(
     def load_env_vars(ctx: dict) -> dict:
         if required_env:
             ctx["config"] = require_config(required_env)
-        missing = [k for k in ("sales", "products", "customers") if not csv_paths.get(k)]
+        missing = [k for k in TABLES if not csv_paths.get(k)]
         if missing:
             raise ValueError(f"missing CSV paths: {', '.join(sorted(missing))}")
         return dict(csv_paths)
@@ -135,59 +150,63 @@ def build_pipeline(
                 raise FileNotFoundError(f"{file_type} file not found: {path}")
         return "ok"
 
-    def load_data(ctx: dict) -> dict:
-        paths = ctx["load_env_vars"]
-        sales = read_source(
-            spark, paths["sales"], "csv", schema=SALES_SCHEMA, rename=SALES_RENAME
-        )
-        products = read_source(
-            spark, paths["products"], "csv", schema=PRODUCTS_SCHEMA, rename=PRODUCTS_RENAME
-        )
-        customers = read_source(
-            spark, paths["customers"], "csv", schema=CUSTOMERS_SCHEMA, rename=CUSTOMERS_RENAME
-        ).withColumn("COUNTRY_ISO3", iso3_column("COUNTRY"))
+    def source(ctx: dict, name: str):
+        """``name``'s renamed source frame; lazy, so no job runs."""
+        path = ctx["load_env_vars"][name]
+        df = read_source(spark, path, "csv", schema=SCHEMAS[name], rename=RENAMES[name])
+        if name == "customers":
+            df = df.withColumn("COUNTRY_ISO3", iso3_column("COUNTRY"))
+        require_columns(df, REQUIRED[name])
+        return df
 
-        frames = {"sales": sales, "products": products, "customers": customers}
-        for name, df in frames.items():
-            require_columns(df, REQUIRED[name])
-        if strict:
-            # every table is checked before any is written, so a failure
-            # leaves the previous load in place (one aggregate per table)
-            all_rules = tuple(r for rules in RULES.values() for r in rules)
-            bad = dq_report(frames, all_rules).where("violations > 0").collect()
-            for name in frames:
-                detail = [
-                    f"{r.rule_name} ({r.violations} rows)" for r in bad if r.table_name == name
-                ]
-                if detail:
-                    raise ValueError(f"validation failed for {name}: {', '.join(detail)}")
-        loaded: dict[str, int] = {}
-        for name, df in frames.items():
+    def check_data(ctx: dict) -> str:
+        # every table is checked before any is written, so a failure
+        # leaves the previous load in place (one aggregate per table)
+        frames = {name: source(ctx, name) for name in TABLES}
+        all_rules = tuple(r for rules in RULES.values() for r in rules)
+        bad = dq_report(frames, all_rules).where("violations > 0").collect()
+        for name in TABLES:
+            detail = [f"{r.rule_name} ({r.violations} rows)" for r in bad if r.table_name == name]
+            if detail:
+                raise ValueError(f"validation failed for {name}: {', '.join(detail)}")
+        return "ok"
+
+    def load_table(name: str):
+        def load(ctx: dict) -> int:
             seen = Observation()
-            valid, invalid = split_valid(df, RULES[name], observation=seen)
-            out = valid
+            valid, invalid = split_valid(source(ctx, name), RULES[name], observation=seen)
             if name == "customers":
                 # reference replaces COUNTRY with the ISO3 code (ETL_DAG.py:193)
-                out = valid.withColumn("COUNTRY", F.col("COUNTRY_ISO3")).drop("COUNTRY_ISO3")
+                valid = valid.withColumn("COUNTRY", F.col("COUNTRY_ISO3")).drop("COUNTRY_ISO3")
             target = "fact_table" if name == "sales" else name
-            overwrite_parquet(out, os.path.join(out_dir, target))
+            overwrite_parquet(valid, os.path.join(out_dir, target))
             counts = seen.get  # filled by the write above: no count job
-            loaded[name] = counts["rows"] - counts["rejected"]
             # a clean table truncates its quarantine with an empty frame,
             # which scans no input; otherwise the rejects are the second
             # and last scan
             if not counts["rejected"]:
                 invalid = spark.createDataFrame([], invalid.schema)
             overwrite_parquet(invalid, os.path.join(out_dir, "quarantine", name))
-        return loaded
+            return counts["rows"] - counts["rejected"]
+
+        return load
+
+    def load_data(ctx: dict) -> dict:
+        return {name: ctx[f"load_{name}"] for name in TABLES}
 
     dag.add(Task("load_env_vars", load_env_vars))
     dag.add(Task("validate_files", validate_files, deps=("load_env_vars",)))
-    dag.add(Task("load_data", load_data, deps=("validate_files",), retries=1))
+    gate = "validate_files"
+    if strict:
+        dag.add(Task("check_data", check_data, deps=(gate,)))
+        gate = "check_data"
+    for name in TABLES:
+        dag.add(Task(f"load_{name}", load_table(name), deps=(gate,), retries=1))
+    dag.add(Task("load_data", load_data, deps=tuple(f"load_{name}" for name in TABLES)))
     return dag
 
 
 def run_pipeline(
     spark: SparkSession, csv_paths: dict[str, str], out_dir: str, strict: bool = False
 ) -> dict:
-    return build_pipeline(spark, csv_paths, out_dir, strict).run()
+    return build_pipeline(spark, csv_paths, out_dir, strict).run(max_workers=len(TABLES))

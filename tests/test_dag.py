@@ -222,3 +222,55 @@ def test_parallel_spark_branches_share_the_session(spark):
     ctx = dag.run(max_workers=4)
     assert ctx["cnt"] == 100_000
     assert ctx["sum"] == 100_000 * 99_999 // 2
+
+
+def test_parallel_branches_inherit_the_callers_job_group(spark):
+    """Jobs started in branch threads stay in the caller's job group and
+    see its job tags, so a caller can attribute and cancel them."""
+    import uuid
+
+    sc = spark.sparkContext
+    group, tag = f"dag-{uuid.uuid4().hex}", f"dag-tag-{uuid.uuid4().hex}"
+    dag = DAG("spark-group")
+
+    def branch(ctx):
+        spark.range(0, 1000, 1, 2).collect()
+        return sc.getLocalProperty("spark.jobGroup.id"), tag in spark.getTags()
+
+    dag.add(Task("left", branch))
+    dag.add(Task("right", branch))
+    sc.setJobGroup(group, "branch inheritance")
+    spark.addTag(tag)
+    try:
+        ctx = dag.run(max_workers=2)
+    finally:
+        spark.removeTag(tag)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert ctx["left"] == ctx["right"] == (group, True)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
+def test_parallel_branches_inherit_the_job_group_outside_the_session_thread(spark):
+    """A caller thread other than the one that made the session has no
+    active session; its branches still keep its job group."""
+    import threading
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dag-{uuid.uuid4().hex}"
+    dag = DAG("spark-group-thread")
+    dag.add(Task("left", lambda ctx: sc.getLocalProperty("spark.jobGroup.id")))
+    dag.add(Task("right", lambda ctx: spark.range(0, 1000, 1, 2).count()))
+    out = {}
+
+    def caller():
+        sc.setJobGroup(group, "branch inheritance")
+        out.update(dag.run(max_workers=2))
+
+    t = threading.Thread(target=caller)
+    t.start()
+    t.join(120)
+    assert not t.is_alive()
+    assert out == {"left": group, "right": 1000}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1

@@ -53,6 +53,19 @@ def _write_csvs(directory, sales, products, customers) -> dict[str, str]:
     return paths
 
 
+def _jobs_of(sc, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` runs, from a job group of its own.
+    ``fn`` may raise; its jobs are counted all the same."""
+    group = f"etl-load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.fixture()
 def csv_paths(tmp_path):
     return _write_csvs(tmp_path, SALES, PRODUCTS, CUSTOMERS)
@@ -86,11 +99,18 @@ def test_pipeline_strict_validates_every_table_before_writing(spark, tmp_path):
     # would already have written fact_table/ when products fails
     paths = _write_csvs(tmp_path / "in", CLEAN_SALES, PRODUCTS, CLEAN_CUSTOMERS)
     out = tmp_path / "wh_strict"
-    with pytest.raises(
-        ValueError, match=r"^validation failed for products: price_non_negative \(1 rows\)$"
-    ):
-        run_pipeline(spark, paths, str(out), strict=True)
+
+    def load():
+        with pytest.raises(
+            ValueError, match=r"^validation failed for products: price_non_negative \(1 rows\)$"
+        ):
+            run_pipeline(spark, paths, str(out), strict=True)
+
+    jobs = _jobs_of(spark.sparkContext, load)
     assert not out.exists()
+    # the check is one aggregate per table and runs once: a failure in
+    # the data is not retried
+    assert 0 < len(jobs) <= 4, jobs
 
 
 def test_pipeline_strict_loads_clean_tables(spark, tmp_path):
@@ -128,6 +148,24 @@ def test_load_runs_only_its_writes(spark, csv_paths, tmp_path):
     assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 6, jobs
+
+
+def test_failing_table_does_not_stop_the_others(spark, csv_paths, tmp_path):
+    from etl_dag_spark.plans.etl_pipeline import build_pipeline
+
+    out = tmp_path / "wh_branch_fail"
+    dag = build_pipeline(spark, csv_paths, str(out))
+
+    def sink_down(ctx):
+        raise RuntimeError("products sink down")
+
+    dag.tasks["load_products"].fn = sink_down
+    with pytest.raises(RuntimeError, match="products sink down"):
+        dag.run(max_workers=3)
+    # the other tables are independent branches and load in full
+    assert spark.read.parquet(str(out / "fact_table")).count() == 2
+    assert spark.read.parquet(str(out / "customers")).count() == 2
+    assert not (out / "products").exists()
 
 
 def test_pipeline_is_idempotent_truncate_and_load(spark, csv_paths, tmp_path):

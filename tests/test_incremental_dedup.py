@@ -166,9 +166,11 @@ def test_store_side_bucket_join_is_exchange_free(spark, corpus):
 def test_adaptive_fast_path_equals_forced_distributed(spark, corpus):
     """The r15 driver fast path (collected store hits + driver greedy,
     no result checkpoint) and the forced distributed shape
-    (driver_solve_max_hits=0 → store hits stay a frame, distributed
+    (driver_solve_max_hits=-1 → store hits stay a frame, distributed
     greedy, eager checkpoint before append) must produce identical
-    keep/matched_store decisions batch for batch."""
+    keep/matched_store decisions batch for batch. The gates are ``<=``,
+    so the force is -1: a batch with no store hits or no edges would
+    pass a 0 bound and take the fast path on both sides."""
     _drop(spark, "t_fast", "t_dist")
     mid = corpus.agg(F.max("doc_id")).first()[0] // 2
     halves = [
@@ -185,8 +187,8 @@ def test_adaptive_fast_path_equals_forced_distributed(spark, corpus):
                 h,
                 "t_dist",
                 bloom_min_store_bytes=0,
-                driver_solve_max_hits=0,
-                driver_solve_max_edges=0,
+                driver_solve_max_hits=-1,
+                driver_solve_max_edges=-1,
             )
         )
     got_f = {
