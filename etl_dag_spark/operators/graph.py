@@ -16,8 +16,18 @@ nothing here touches more than one pass of it per iteration.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_RANKS = "node string, rank double"
+
+
+def _local_frame(edges: DataFrame, columns: dict[str, pa.Array], schema: str) -> DataFrame:
+    """A driver-solved result as a local relation built from Arrow
+    columns: reading it runs no Python worker, unlike a frame created
+    from a list of rows (a ``Scan ExistingRDD`` of pickled rows)."""
+    return edges.sparkSession.createDataFrame(pa.table(columns), schema)
 
 
 def bfs_distances(
@@ -94,9 +104,12 @@ def bfs_distances(
                         dist[v] = level
                         nxt.append(v)
             frontier = nxt
-        return edges.sparkSession.createDataFrame(
-            sorted(dist.items()), "node string, dist int"
-        )
+        nodes = sorted(dist)
+        columns = {
+            "node": pa.array(nodes, pa.string()),
+            "dist": pa.array([dist[v] for v in nodes], pa.int32()),
+        }
+        return _local_frame(edges, columns, "node string, dist int")
     try:
         visited = (
             sources.select(F.col(sources.columns[0]).cast("string").alias("node"))
@@ -182,7 +195,9 @@ def pagerank(
     n_edges = e.count()
     if n_edges == 0:
         e.unpersist()
-        return edges.sparkSession.createDataFrame([], "node string, rank double")
+        return _local_frame(
+            edges, {"node": pa.array([], pa.string()), "rank": pa.array([], pa.float64())}, _RANKS
+        )
     if n_edges <= driver_solve_max_edges:
         import numpy as np
 
@@ -215,9 +230,9 @@ def pagerank(
             np.add.at(contrib, dst_i, rank[src_i] * p)
             dm = float(rank[dangling].sum())
             rank = (1.0 - damping) / n + (damping / n) * dm + damping * contrib
-        return edges.sparkSession.createDataFrame(
-            [(v, float(rank[idx[v]])) for v in node_list],
-            "node string, rank double",
+        # idx enumerates node_list, so rank is already in node order
+        return _local_frame(
+            edges, {"node": pa.array(node_list, pa.string()), "rank": pa.array(rank)}, _RANKS
         )
     nodes = (
         e.select(F.col("src").alias("node"))

@@ -18,17 +18,25 @@ False) and the check raises.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
 class Rule:
+    """``predicate`` is a SQL boolean expression; TRUE means the row is
+    valid. It must be deterministic and read only the row's columns: a
+    load tags a table's rows in one pass and tags its rejected rows
+    again from the staged copy (plans/etl_pipeline.py), and the two
+    passes must agree."""
+
     table: str
     name: str
-    predicate: str  # SQL boolean expression; TRUE means the row is valid
+    predicate: str
 
 
 # Default rule set — the reference's checks transposed onto the test
@@ -51,6 +59,13 @@ def require_columns(df: DataFrame, required: list[str]) -> None:
         raise ValueError(f"missing required columns: {sorted(missing)}")
 
 
+def violated(predicate: str) -> Column:
+    """TRUE where a row breaks the rule ``predicate`` (NULL inputs
+    included); never NULL. The one definition of a violation: the rule
+    counts, the validity predicate and the tagging all derive from it."""
+    return F.expr(f"({predicate}) IS NOT TRUE")
+
+
 def rule_counts(df: DataFrame, rules: list[tuple[str, str]]) -> DataFrame:
     """(rule_name, violations, total_rows) for ad-hoc (name, predicate)
     rules over ONE frame — a single wide aggregate scan however many
@@ -59,7 +74,7 @@ def rule_counts(df: DataFrame, rules: list[tuple[str, str]]) -> DataFrame:
     is safe). Shared by :func:`dq_report` and the streaming monitor
     (streaming/quality.py)."""
     aggs = [
-        F.sum(F.when(F.expr(f"({pred}) IS NOT TRUE"), 1).otherwise(0))
+        F.sum(F.when(violated(pred), 1).otherwise(0))
         .cast("bigint")
         .alias(f"__r{i}")
         for i, (_, pred) in enumerate(rules)
@@ -113,33 +128,38 @@ def dq_report_sql(rules: tuple[Rule, ...] = DEFAULT_RULES) -> str:
     return "\nUNION ALL\n".join(selects)
 
 
-def split_valid(
-    df: DataFrame, rules: list[Rule], observation: Observation | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) split — the scalable version of the
-    reference's raise-on-any-violation: bad rows are quarantined with the
-    list of failed rules instead of failing the whole load.
+def is_valid(rules: list[Rule]) -> Column:
+    """The row-validity predicate: TRUE where the row breaks none of
+    ``rules``; never NULL. A plain boolean expression (codegen), so a
+    full-table pass can tag validity without :func:`tag_rules`'s
+    interpreted array lambda."""
+    return ~reduce(operator.or_, (violated(r.predicate) for r in rules), F.lit(False))
 
-    ``observation``, when given, is attached to the tagged frame before
-    the split, so the first action over either side also reports
-    ``rows`` (all input rows) and ``rejected`` (rows failing any rule)
-    without a separate count job."""
+
+def count_rejects(df: DataFrame, valid: Column, observation: Observation) -> DataFrame:
+    """``df`` with ``observation`` attached: the first action over it
+    also reports ``rows`` (all rows) and ``rejected`` (rows where
+    ``valid`` is false) without a separate count job."""
+    return df.observe(
+        observation,
+        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when(~valid, 1)).alias("rejected"),
+    )
+
+
+def tag_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """``df`` plus ``__failed_rules``: the names of the rules each row
+    breaks, in rule order (empty exactly where :func:`is_valid` holds)."""
     failed = F.filter(
-        F.array(
-            *[
-                F.when(F.expr(f"({r.predicate}) IS NOT TRUE"), F.lit(r.name))
-                for r in rules
-            ]
-        ),
+        F.array(*[F.when(violated(r.predicate), F.lit(r.name)) for r in rules]),
         lambda x: x.isNotNull(),
     )
-    tagged = df.withColumn("__failed_rules", failed)
-    if observation is not None:
-        tagged = tagged.observe(
-            observation,
-            F.count(F.lit(1)).alias("rows"),
-            F.count(F.when(F.size("__failed_rules") > 0, 1)).alias("rejected"),
-        )
-    valid = tagged.where(F.size("__failed_rules") == 0).drop("__failed_rules")
-    invalid = tagged.where(F.size("__failed_rules") > 0)
-    return valid, invalid
+    return df.withColumn("__failed_rules", failed)
+
+
+def split_valid(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
+    """(valid, quarantined) split — the scalable version of the
+    reference's raise-on-any-violation: bad rows are quarantined with the
+    list of failed rules instead of failing the whole load."""
+    ok = is_valid(rules)
+    return df.where(ok), tag_rules(df.where(~ok), rules)

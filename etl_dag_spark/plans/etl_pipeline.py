@@ -19,14 +19,19 @@ Differences that matter at 100 TB (each one deliberate):
 
 - Reads are lazy Spark scans with explicit schemas (no inferSchema
   pass); renames are metadata-only projections.
-- Validation tags each row with its failed rules inside the pass that
+- Validation tags each row valid or invalid inside the pass that
   writes it, instead of a pandas boolean mask per rule. The default
   quarantines invalid rows to parquet and loads the rest (a 100 TB
-  load shouldn't be aborted by three bad rows): the target write reads
-  the table once and reports its loaded and rejected counts as
-  observed metrics, and only a table with rejects is read a second
-  time, by its quarantine write. A clean table's quarantine is
-  truncated with an empty frame, which reads nothing.
+  load shouldn't be aborted by three bad rows), and reads each CSV
+  once: one write, partitioned on the validity tag, stages the target's
+  columns to ``out_dir/_staging_<table>`` and reports the loaded and
+  rejected counts as observed metrics; a rename publishes the valid
+  rows as the target; the quarantine is written from the small staged
+  rejects, tagged again with the names of the rules they break
+  (``sources.sinks.overwrite_parquet_split``). Staged customers keep
+  their original ``COUNTRY`` spelling on rejected rows, so the
+  re-tagging sees what the first pass saw; the load raises if the two
+  passes disagree on the rejected count.
 - ``strict=True`` reproduces the reference's raise-on-any-violation.
   Its ``check_data`` task checks all three tables first, one aggregate
   per table, and raises before any branch writes. It is not retried: a
@@ -41,14 +46,21 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_dag_spark.functions.country import iso3_column
-from etl_dag_spark.operators.validation import Rule, dq_report, require_columns, split_valid
+from etl_dag_spark.operators.validation import (
+    Rule,
+    count_rejects,
+    dq_report,
+    is_valid,
+    require_columns,
+    tag_rules,
+)
 from etl_dag_spark.plans.dag import DAG, Task
 from etl_dag_spark.sources.readers import read_source
-from etl_dag_spark.sources.sinks import overwrite_parquet
+from etl_dag_spark.sources.sinks import overwrite_parquet, overwrite_parquet_split
 
 TABLES = ("sales", "products", "customers")
 
@@ -102,6 +114,14 @@ RULES = {
 }
 
 
+def with_rule_inputs(name: str, df: DataFrame) -> DataFrame:
+    """``df`` plus the derived columns ``name``'s rules read: the ISO3
+    code of each customer's country (ETL_DAG.py:144-151)."""
+    if name == "customers":
+        return df.withColumn("COUNTRY_ISO3", iso3_column("COUNTRY"))
+    return df
+
+
 def require_config(required: list[str], env: dict | None = None) -> dict[str, str]:
     """Fail-fast required-config validation — the first task of the
     reference DAG (ETL_DAG.py:44-58 ``load_env_vars``: a required-vars
@@ -133,7 +153,8 @@ def build_pipeline(
     first task, before any Spark job runs.
     Outputs land under ``out_dir``: fact_table/, products/, customers/,
     plus quarantine/<table>/ with this run's rejected rows (empty for a
-    table without rejects, so after every strict run)."""
+    table without rejects, so after every strict run); _staging_<table>/
+    exists only while its table loads."""
     dag = DAG("reference_etl")
 
     def load_env_vars(ctx: dict) -> dict:
@@ -153,9 +174,9 @@ def build_pipeline(
     def source(ctx: dict, name: str):
         """``name``'s renamed source frame; lazy, so no job runs."""
         path = ctx["load_env_vars"][name]
-        df = read_source(spark, path, "csv", schema=SCHEMAS[name], rename=RENAMES[name])
-        if name == "customers":
-            df = df.withColumn("COUNTRY_ISO3", iso3_column("COUNTRY"))
+        df = with_rule_inputs(
+            name, read_source(spark, path, "csv", schema=SCHEMAS[name], rename=RENAMES[name])
+        )
         require_columns(df, REQUIRED[name])
         return df
 
@@ -173,20 +194,35 @@ def build_pipeline(
 
     def load_table(name: str):
         def load(ctx: dict) -> int:
+            rules = RULES[name]
             seen = Observation()
-            valid, invalid = split_valid(source(ctx, name), RULES[name], observation=seen)
+            staged = count_rejects(
+                source(ctx, name).withColumn("__ok", is_valid(rules)), F.col("__ok"), seen
+            )
             if name == "customers":
-                # reference replaces COUNTRY with the ISO3 code (ETL_DAG.py:193)
-                valid = valid.withColumn("COUNTRY", F.col("COUNTRY_ISO3")).drop("COUNTRY_ISO3")
-            target = "fact_table" if name == "sales" else name
-            overwrite_parquet(valid, os.path.join(out_dir, target))
-            counts = seen.get  # filled by the write above: no count job
-            # a clean table truncates its quarantine with an empty frame,
-            # which scans no input; otherwise the rejects are the second
-            # and last scan
-            if not counts["rejected"]:
-                invalid = spark.createDataFrame([], invalid.schema)
-            overwrite_parquet(invalid, os.path.join(out_dir, "quarantine", name))
+                # the reference replaces COUNTRY with the ISO3 code
+                # (ETL_DAG.py:193); rejected rows keep the original
+                # spelling, which their quarantine re-tagging reads
+                iso3 = F.when(F.col("__ok"), F.col("COUNTRY_ISO3"))
+                staged = staged.withColumn("COUNTRY", iso3.otherwise(F.col("COUNTRY")))
+            staged = staged.select(*RENAMES[name].values(), "__ok")
+            target = os.path.join(out_dir, "fact_table" if name == "sales" else name)
+            staging = os.path.join(out_dir, f"_staging_{name}")
+            requarantined = Observation()
+            with overwrite_parquet_split(staged, "__ok", staging, target) as rejects:
+                quarantine = tag_rules(with_rule_inputs(name, rejects), rules)
+                overwrite_parquet(
+                    count_rejects(quarantine, is_valid(rules), requarantined),
+                    os.path.join(out_dir, "quarantine", name),
+                )
+            # both filled by the writes above: no count job
+            counts, again = seen.get, requarantined.get
+            if again["rows"] != counts["rejected"] or again["rejected"] != again["rows"]:
+                raise RuntimeError(
+                    f"{name}: the load rejected {counts['rejected']} rows, but tagging the "
+                    f"staged rejects again rejected {again['rejected']} of {again['rows']} "
+                    "(rule predicates must be deterministic)"
+                )
             return counts["rows"] - counts["rejected"]
 
         return load

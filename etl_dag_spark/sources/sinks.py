@@ -7,9 +7,18 @@ directory IS truncate-and-load; with ``partition_by`` plus dynamic
 partition overwrite, a rerun replaces only the partitions it produced —
 the idempotency pattern that matters when a daily DAG backfills one day
 of a 100 TB table instead of rewriting all of it.
+
+:func:`overwrite_parquet_split` loads the two sides of a boolean split
+(valid rows and rejects) from ONE pass over the input: a partitioned
+write to a staging directory, then a FileSystem rename publishes the
+accepted side, and the caller writes the rejected side from its small
+staged copy instead of reading the input a second time.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -39,6 +48,62 @@ def overwrite_parquet(
             "overwrite_bucketed_table"
         )
     writer.parquet(path)
+
+
+@contextmanager
+def overwrite_parquet_split(
+    df: DataFrame, flag: str, staging: str, accepted: str
+) -> Iterator[DataFrame]:
+    """Truncate-and-load the rows of ``df`` where the boolean column
+    ``flag`` is true into ``accepted``, and yield the other rows for the
+    caller to write; neither side keeps ``flag``. ``df`` is read once.
+
+    Protocol (Hadoop ``FileSystem`` calls, so any URI scheme works;
+    ``staging`` must be on ``accepted``'s file system, since a rename
+    publishes):
+
+    1. one write of ``df`` partitioned by ``flag`` into ``staging``, with
+       a STATIC overwrite, so a staging directory left by a crashed run
+       (a stale ``flag=false`` partition included) is replaced whole;
+    2. ``staging/flag=true`` replaces ``accepted`` by a rename, plus a
+       ``_SUCCESS`` marker; without accepted rows, ``accepted`` gets an
+       empty dataset with the schema;
+    3. the yielded frame reads ``staging/flag=false`` with the staged
+       schema (no inference job), or is empty when no row was rejected;
+    4. ``staging`` is deleted once the caller's block exits.
+
+    Empty sides are ``limit(0)`` frames: the optimizer turns them into
+    empty local relations, so writing one reads no input.
+    """
+    spark = df.sparkSession
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    stage = Path(staging)
+    fs = stage.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy(flag)
+            .parquet(staging)
+        )
+        empty = df.drop(flag).limit(0)
+        side = Path(stage, f"{flag}=true")
+        if fs.exists(side):
+            target = Path(accepted)
+            fs.delete(target, True)
+            fs.mkdirs(target.getParent())
+            if not fs.rename(side, target):
+                raise OSError(f"could not publish {staging} as {accepted}")
+            fs.create(Path(target, "_SUCCESS"), True).close()
+        else:
+            overwrite_parquet(empty, accepted)
+        side = Path(stage, f"{flag}=false")
+        if fs.exists(side):
+            yield spark.read.schema(empty.schema).parquet(side.toString())
+        else:
+            yield empty
+    finally:
+        fs.delete(stage, True)
 
 
 def overwrite_jdbc(

@@ -5,11 +5,15 @@ normalization, quarantine vs strict failure, idempotent reload."""
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
-from etl_dag_spark.plans.etl_pipeline import run_pipeline
+from etl_dag_spark.operators.validation import Rule
+from etl_dag_spark.plans.etl_pipeline import RENAMES, SCHEMAS, TABLES, run_pipeline
+from tools.etl_output_digest import digest
 
 SALES = """TransactionID,Date,CustomerID,ProductID,Amount
 1,2024-01-01,10,100,49.99
@@ -135,8 +139,9 @@ def test_clean_rerun_truncates_quarantine(spark, csv_paths, tmp_path):
 
 
 def test_load_runs_only_its_writes(spark, csv_paths, tmp_path):
-    # every fixture table has rejects, so each one is read by exactly two
-    # writes (valid rows, quarantine); the counts ride on the first write
+    # every fixture table has rejects, so each one runs exactly two
+    # writes (the staged split, which reads the CSV, and the quarantine,
+    # which reads the staged rejects); the counts ride on the writes
     sc = spark.sparkContext
     group = f"etl-load-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job-count pin")
@@ -148,6 +153,89 @@ def test_load_runs_only_its_writes(spark, csv_paths, tmp_path):
     assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 6, jobs
+
+
+def test_each_input_is_scanned_once(spark, csv_paths, tmp_path, monkeypatch):
+    """Each table's CSV is read by its first write only: removing the
+    file as soon as that write returns changes no output (a second scan,
+    such as a quarantine write over the CSV, fails on the missing file)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    want = str(tmp_path / "wh_ref")
+    run_pipeline(spark, csv_paths, want)
+    out = str(tmp_path / "wh_once")
+    # a write belongs to the table its path under out names
+    names = {
+        "sales": ("sales", "fact_table"),
+        "products": ("products",),
+        "customers": ("customers",),
+    }
+    removed: set[str] = set()
+    lock = threading.Lock()  # the tables load in concurrent branches
+    parquet = DataFrameWriter.parquet
+
+    def parquet_then_remove(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        written = os.path.relpath(path, out)
+        with lock:
+            for name, keys in names.items():
+                if name not in removed and any(k in written for k in keys):
+                    removed.add(name)
+                    os.remove(csv_paths[name])
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_then_remove)
+    ctx = run_pipeline(spark, csv_paths, out)
+    assert removed == set(TABLES)
+    assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
+    assert digest(out) == digest(want)
+
+
+def test_table_without_valid_rows_gets_an_empty_target(spark, csv_paths, tmp_path):
+    out = tmp_path / "wh_all_bad"
+    run_pipeline(spark, csv_paths, str(out))
+    all_bad = "ProductID,ProductName,Category,Price\n102,Gizmo,Toys,-1.00\n104,Thing,Toys,-2.50\n"
+    paths = _write_csvs(tmp_path / "in", SALES, all_bad, CUSTOMERS)
+    ctx = run_pipeline(spark, paths, str(out))
+    assert ctx["load_data"] == {"sales": 2, "products": 0, "customers": 2}
+    products = spark.read.parquet(str(out / "products"))
+    assert products.count() == 0  # truncated: the previous load had 3
+    assert products.schema.simpleString() == (
+        "struct<PRODUCT_ID:bigint,PRODUCT_NAME:string,CATEGORY:string,PRICE:double>"
+    )
+    assert spark.read.parquet(str(out / "quarantine" / "products")).count() == 2
+
+
+def test_stale_staging_does_not_leak(spark, tmp_path):
+    paths = _write_csvs(tmp_path / "in", CLEAN_SALES, CLEAN_PRODUCTS, CLEAN_CUSTOMERS)
+    out = tmp_path / "wh_stale"
+    # what a load that died between its staging write and its cleanup
+    # leaves behind: every row staged as rejected
+    for name in TABLES:
+        stale = spark.read.csv(paths[name], header=True, schema=SCHEMAS[name])
+        stale.withColumnsRenamed(RENAMES[name]).withColumn("__ok", F.lit(False)).write.partitionBy(
+            "__ok"
+        ).parquet(str(out / f"_staging_{name}"))
+    ctx = run_pipeline(spark, paths, str(out))
+    assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
+    for name in TABLES:
+        assert spark.read.parquet(str(out / "quarantine" / name)).count() == 0, name
+    assert sorted(p.name for p in out.iterdir()) == [
+        "customers", "fact_table", "products", "quarantine"
+    ]
+
+
+def test_rules_that_disagree_between_passes_fail_the_load(
+    spark, csv_paths, tmp_path, monkeypatch
+):
+    from etl_dag_spark.plans import etl_pipeline
+
+    # depends on the file a row is read from, not only on the row: valid
+    # in the staged parquet copy, so re-tagging the staged rejects finds
+    # none of them
+    rule = Rule("sales", "amount_positive", "AMOUNT > 0 OR input_file_name() LIKE '%.parquet'")
+    monkeypatch.setitem(etl_pipeline.RULES, "sales", [rule])
+    with pytest.raises(RuntimeError, match="sales: the load rejected 1 rows, .* rejected 0 of 1"):
+        run_pipeline(spark, csv_paths, str(tmp_path / "wh_nondet"))
 
 
 def test_failing_table_does_not_stop_the_others(spark, csv_paths, tmp_path):

@@ -85,6 +85,28 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(empty, weight_col="w").count() == 0
 
 
+def test_driver_solved_results_are_local_relations(spark):
+    """Both ops' driver-solved results (and pagerank's empty one) are
+    Arrow-built local relations, so reading them runs no Python worker;
+    a frame created from a list of rows is a ``Scan ExistingRDD`` of
+    pickled rows."""
+    from etl_dag_spark.operators.graph import bfs_distances
+
+    edges = spark.createDataFrame(CASES[1], "src string, dst string, w double")
+    sources = spark.createDataFrame([("a",)], "node string")
+    results = {
+        "struct<node:string,rank:double>": [
+            pagerank(edges, weight_col="w"),
+            pagerank(edges.limit(0), weight_col="w"),
+        ],
+        "struct<node:string,dist:int>": [bfs_distances(edges, sources)],
+    }
+    for schema, frames in results.items():
+        for df in frames:
+            leaf = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            assert (leaf, df.schema.simpleString()) == ("LocalRelation", schema)
+
+
 def test_nation_pagerank_invariants(spark):
     from etl_dag_spark.queries import SPARK_QUERIES
 
