@@ -27,10 +27,15 @@ literal reference Python BPE in tests/test_bpe.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_dag_spark.functions.text import tokens_column
+from etl_dag_spark.operators.adaptive import local_frame, on_driver
+
+# train_bpe runs its merges on the driver when the word-type cap is at
+# most this many rows
+_DRIVER_MAX_WORD_TYPES = 200_000
 
 
 def word_type_table(
@@ -118,12 +123,21 @@ def _driver_bpe(word_counts: dict[str, int], num_merges: int) -> list[tuple]:
     return merges
 
 
+def _merge_frame(spark: SparkSession, merges: list[tuple]) -> DataFrame:
+    """The learned merge table as a local relation."""
+    cols = ("rank", "left", "right", "merged", "pair_count")
+    return local_frame(
+        spark,
+        {c: [m[i] for m in merges] for i, c in enumerate(cols)},
+        "rank int, left string, right string, merged string, pair_count bigint",
+    )
+
+
 def train_bpe(
     documents: DataFrame,
     num_merges: int = 30,
     text_col: str = "text",
     max_word_types: int | None = 100_000,
-    driver_solve_max_word_types: int = 200_000,
 ) -> DataFrame:
     """Learn ``num_merges`` BPE merges from the corpus. Returns the
     merge table (rank INT, left STRING, right STRING, merged STRING,
@@ -134,33 +148,24 @@ def train_bpe(
     right asc) and merge application is left-to-right non-overlapping,
     so the learned sequence is a pure function of the word-type table.
 
-    ADAPTIVE physical strategy (r15, the greedy_earliest_survivors
-    pattern applied to the merge loop): the iteration state is the
-    word-type table, which is BOUNDED BY CONTRACT at ``max_word_types``
-    rows (exact top-k, an operator constant — never SF-scaled). When
-    that bound is at most ``driver_solve_max_word_types``, collect the
-    table ONCE and run the merges in :func:`_driver_bpe` — replacing
-    ``num_merges`` scheduler-bound Spark jobs (one TakeOrdered per
-    merge) with a single bounded collect. An UNCAPPED trainer
-    (``max_word_types=None``) or a cap above the driver bound runs the
-    distributed loop unchanged; ``driver_solve_max_word_types=0``
-    forces it in tests, and tests/test_bpe.py pins the two paths (and
-    the literal reference) merge-for-merge equal.
+    ADAPTIVE physical strategy (``operators/adaptive.py``): the
+    iteration state is the word-type table, which is BOUNDED BY
+    CONTRACT at ``max_word_types`` rows (exact top-k, an operator
+    constant — never SF-scaled). When that bound is at most
+    ``_DRIVER_MAX_WORD_TYPES``, collect the table ONCE and run the
+    merges in :func:`_driver_bpe` — replacing ``num_merges``
+    scheduler-bound Spark jobs (one TakeOrdered per merge) with a single
+    bounded collect. An UNCAPPED trainer (``max_word_types=None``) or a
+    cap above the driver bound runs the distributed loop unchanged;
+    tests/test_bpe.py pins the two paths (and the literal reference)
+    merge-for-merge equal.
     """
     spark = documents.sparkSession
     words = word_type_table(documents, text_col, max_word_types)
-    if (
-        max_word_types is not None
-        and int(max_word_types) <= driver_solve_max_word_types
-    ):
+    if on_driver("train_bpe", max_word_types, _DRIVER_MAX_WORD_TYPES):
         pdf = words.toPandas()
         wc = {str(w): int(c) for w, c in zip(pdf["w"], pdf["c"])}
-        out_schema = (
-            "rank int, left string, right string, merged string, pair_count bigint"
-        )
-        return spark.createDataFrame(
-            _driver_bpe(wc, int(num_merges)), out_schema
-        )
+        return _merge_frame(spark, _driver_bpe(wc, int(num_merges)))
     # symbol string: characters separated by DOUBLE spaces, double-space
     # padded. The double separator is load-bearing: a merge pattern
     # " a  b " consumes one space from each side and its replacement
@@ -180,7 +185,6 @@ def train_bpe(
         F.col("c"),
     ).localCheckpoint(eager=True)
 
-    out_schema = "rank int, left string, right string, merged string, pair_count bigint"
     merges: list[tuple] = []
     # Adjacent-pair counting is SHUFFLE-MINIMAL (r14): zip each word's
     # symbol array against itself shifted by one (slice + arrays_zip —
@@ -228,7 +232,7 @@ def train_bpe(
         if pending == 6:  # bound the replace-chain depth (codegen size)
             reprs = reprs.localCheckpoint(eager=False)
             pending = 0
-    return spark.createDataFrame(merges, out_schema)
+    return _merge_frame(spark, merges)
 
 
 def apply_bpe(

@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 import random
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +31,16 @@ from etl_dag_spark.functions.text import (
     shingle_rows,
     tokens_column,
 )
+from etl_dag_spark.operators.adaptive import collect_if_small, local_frame, on_driver
+
+# driver-solve bounds (operators/adaptive.py): match edges and store hits
+# up to these row counts are decided on the driver
+_DRIVER_MAX_EDGES = 500_000
+_DRIVER_MAX_HITS = 500_000
+# incremental dedup's Bloom store prefilter: bits, and the on-disk store
+# size above which it engages
+_BLOOM_BITS = 1 << 20
+_BLOOM_STORE_BYTES = 64 * 1024 * 1024
 
 # ------------------------------------------------------------ exact dedup
 
@@ -915,8 +926,6 @@ def cluster_pairs(
     documents: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 30,
-    driver_solve_max_edges: int = 500_000,
-    validate_endpoints: bool = False,
 ) -> DataFrame:
     """Connected components over near-dup ``pairs`` → one cluster id per
     document (the min doc_id in its component) and a keep flag for the
@@ -927,24 +936,23 @@ def cluster_pairs(
     ``documents[id_col]`` — true for every caller in this repo (pairs
     are derived from the same frame). On contract-violating input the
     two physical paths differ in how a stray endpoint's edges merge
-    components; pass ``validate_endpoints=True`` when feeding
-    externally-produced pairs and the driver path will probe endpoint
-    membership (one broadcast-semi job, corpus side never shuffled)
-    so both paths agree on any input.
+    components: the distributed fixpoint leaves a stray endpoint inert
+    (it has no label row), while the driver union-find merges through
+    it, and its id can become a cluster_id.
 
-    ADAPTIVE physical strategy (r14, the greedy_earliest_survivors
-    pattern): only nodes that appear in some pair can change label —
-    the matched subgraph, typically a tiny fraction of a mostly-unique
-    corpus. When the (deduplicated) edge count is at most
-    ``driver_solve_max_edges`` (one count over the already-checkpointed
-    edge frame), min-label components are solved DRIVER-SIDE with one
-    union-find pass over the collected edges — replacing the fixpoint's
-    per-round Spark jobs (join + scalar-aggregate per round) whose
-    scheduler overhead dominates at small candidate volumes. Above the
-    bound, the distributed min-label fixpoint below runs over the
-    TOUCHED subgraph only (untouched docs are their own cluster by
-    construction and never enter the iteration) — the 100 TB path never
-    collects a corpus-scaled frame. The two strategies are equal by
+    ADAPTIVE physical strategy (``operators/adaptive.py``): only nodes
+    that appear in some pair can change label — the matched subgraph,
+    typically a tiny fraction of a mostly-unique corpus. When the
+    (deduplicated) edge count is at most ``_DRIVER_MAX_EDGES`` (one
+    ``limit`` probe of the already-checkpointed edge frame), min-label
+    components are solved DRIVER-SIDE with one union-find pass over the
+    collected edges — replacing the fixpoint's per-round Spark jobs
+    (join + scalar-aggregate per round) whose scheduler overhead
+    dominates at small candidate volumes. Above the bound, the
+    distributed min-label fixpoint below runs over the TOUCHED subgraph
+    only (untouched docs are their own cluster by construction and never
+    enter the iteration) — the 100 TB path never collects a
+    corpus-scaled frame. The two strategies are equal by
     construction (union-by-min keeps each tree's root at the component
     minimum) and pinned equal in tests/test_dedup_recall.py.
 
@@ -968,53 +976,10 @@ def cluster_pairs(
     )
     all_nodes = documents.select(F.col(id_col).cast("bigint").alias("node"))
 
-    def _result(labels: DataFrame, touched_nodes: DataFrame) -> DataFrame:
-        untouched = all_nodes.join(touched_nodes, "node", "left_anti").select(
-            "node", F.col("node").alias("label")
-        )
-        return labels.unionByName(untouched).select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            (F.col("node") == F.col("label")).alias("is_canonical"),
-        )
-
-    # one-job adaptive probe (r15): limit(bound+1).collect() answers
-    # "≤ bound edges?" AND delivers the rows when yes — replacing the
-    # count job + collect job pair. Row order differs from collect(),
-    # which union-by-min is insensitive to (the component min is the
-    # min under any union order).
-    probe = half.limit(driver_solve_max_edges + 1).collect()
-    if len(probe) <= driver_solve_max_edges:
-        rows = probe
-        # Path-equality on contract-VIOLATING input (r15, ADVICE r14):
-        # an endpoint absent from ``documents`` is inert in the
-        # distributed fixpoint (it has no label row, so edges through
-        # it propagate nothing), but a naive driver union-find would
-        # merge components THROUGH it (and its id could even win the
-        # min and become a cluster_id). With ``validate_endpoints``,
-        # probe which collected endpoints actually exist — one
-        # broadcast-semi job over the id column (the corpus side never
-        # shuffles; the broadcast is the bounded endpoint set) — and
-        # skip edges with a stray endpoint, so both physical paths
-        # agree on ANY input. Default off: every caller in this repo
-        # derives ``pairs`` from ``documents`` itself (the documented
-        # contract), and the probe is pure overhead on the hot path.
-        valid: set[int] | None = None
-        if validate_endpoints:
-            endpoints = sorted(
-                {int(r["u"]) for r in rows} | {int(r["v"]) for r in rows}
-            )
-            # __db_ leaf prefix = driver-built bounded collection (the
-            # broadcast-hint audit's reserved-name convention)
-            ep_df = spark.createDataFrame(
-                [(x,) for x in endpoints], "__db_node bigint"
-            ).select(F.col("__db_node").alias("node"))
-            valid = {
-                int(r["node"])
-                for r in all_nodes.join(
-                    F.broadcast(ep_df), "node", "left_semi"
-                ).collect()
-            }
+    # union-by-min is insensitive to edge order (the component min is
+    # the min under any union order)
+    small = collect_if_small("cluster_pairs", half, _DRIVER_MAX_EDGES)
+    if small is not None:
         parent: dict[int, int] = {}
 
         def _find(x: int) -> int:
@@ -1025,10 +990,7 @@ def cluster_pairs(
                 parent[x], x = root, parent[x]
             return root
 
-        for r in rows:
-            u, v = int(r["u"]), int(r["v"])
-            if valid is not None and (u not in valid or v not in valid):
-                continue  # stray endpoint: inert, as in the fixpoint
+        for u, v in zip(small["u"].to_pylist(), small["v"].to_pylist()):
             parent.setdefault(u, u)
             parent.setdefault(v, v)
             ru, rv = _find(u), _find(v)
@@ -1039,24 +1001,19 @@ def cluster_pairs(
                     parent[rv] = ru
                 else:
                     parent[ru] = rv
-        decided = spark.createDataFrame(
-            sorted((x, _find(x)) for x in parent),
-            "__db_node bigint, __db_label bigint",
-        ).select(
-            F.col("__db_node").alias("node"), F.col("__db_label").alias("label")
+        nodes = sorted(parent)
+        decided = local_frame(
+            spark,
+            {"node": nodes, "__lbl": [_find(x) for x in nodes]},
+            "node bigint, __lbl bigint",
         )
         # single-scan assembly (r15): the decided map is a broadcast
         # LocalRelation, so ONE pass over the corpus id column labels
         # every node — replacing the labels semi-join + untouched
         # anti-join + union (two corpus scans and two joins) of the
-        # generic _result. A stray decided id (endpoint not in
-        # documents) simply never matches the left join — the same
-        # containment the old semi-join pinned.
-        return all_nodes.join(
-            F.broadcast(decided.withColumnRenamed("label", "__lbl")),
-            "node",
-            "left",
-        ).select(
+        # distributed path. A stray decided id (endpoint not in
+        # documents) simply never matches the left join.
+        return all_nodes.join(F.broadcast(decided), "node", "left").select(
             F.col("node").alias("doc_id"),
             F.coalesce(F.col("__lbl"), F.col("node")).alias("cluster_id"),
             (F.col("node") == F.coalesce(F.col("__lbl"), F.col("node"))).alias(
@@ -1101,13 +1058,20 @@ def cluster_pairs(
         prev_sum = new_sum
     else:
         raise RuntimeError(f"components did not converge in {max_iter} rounds")
-    return _result(labels, labels.select("node"))
+    untouched = all_nodes.join(labels.select("node"), "node", "left_anti").select(
+        "node", F.col("node").alias("label")
+    )
+    return labels.unionByName(untouched).select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+        (F.col("node") == F.col("label")).alias("is_canonical"),
+    )
 
 
 # ------------------------------------------- incremental dedup w/ store
 
 
-def _greedy_keep_from_edges(edge_rows) -> dict[int, bool]:
+def _greedy_keep_from_edges(edges: pa.Table) -> dict[int, bool]:
     """Sequential-greedy keep decisions over collected (u, v) match
     edges (u < v): ascending id order, a node is DROPPED iff it matches
     some earlier node that itself SURVIVED. Returns the decision for
@@ -1116,8 +1080,8 @@ def _greedy_keep_from_edges(edge_rows) -> dict[int, bool]:
     branch and :func:`incremental_minhash_dedup`'s fast path, so the
     two can never drift."""
     smaller: dict[int, list[int]] = {}
-    for r in edge_rows:
-        smaller.setdefault(int(r["v"]), []).append(int(r["u"]))
+    for u, v in zip(edges["u"].to_pylist(), edges["v"].to_pylist()):
+        smaller.setdefault(v, []).append(u)
     keep: dict[int, bool] = {}
     for node in sorted(set(smaller) | {u for us in smaller.values() for u in us}):
         keep[node] = not any(keep.get(u, True) for u in smaller.get(node, []))
@@ -1128,7 +1092,6 @@ def greedy_earliest_survivors(
     edges: DataFrame,
     nodes: DataFrame,
     max_iter: int = 30,
-    driver_solve_max_edges: int = 500_000,
 ) -> DataFrame:
     """Deterministic sequential-greedy dedup decision, distributed:
     processing nodes in ascending id order, a node is DROPPED iff it
@@ -1142,15 +1105,14 @@ def greedy_earliest_survivors(
     ``nodes`` (the callers prune to the undecided set first).
     ``nodes``: one ``node`` column. → (node, keep).
 
-    ADAPTIVE physical strategy (r14, the AQE idea applied to an
-    iterative op): only nodes that appear in some edge need any
-    decision logic — the matched subgraph, typically a small fraction
-    of a mostly-unique batch. When its edge count is at most
-    ``driver_solve_max_edges`` (one count over the already-checkpointed
-    edge frame), the exact sequential greedy runs DRIVER-SIDE in one
-    pass over the collected edges — replacing the fixpoint's per-round
-    Spark jobs (count + join per round) whose scheduler overhead
-    dominates at small sizes (measured 3.6 s → ~0.3 s per ingest batch
+    ADAPTIVE physical strategy (``operators/adaptive.py``): only nodes
+    that appear in some edge need any decision logic — the matched
+    subgraph, typically a small fraction of a mostly-unique batch. When
+    its edge count is at most ``_DRIVER_MAX_EDGES`` (one ``limit`` probe
+    of the already-checkpointed edge frame), the exact sequential greedy
+    runs DRIVER-SIDE in one pass over the collected edges — replacing
+    the fixpoint's per-round Spark jobs (count + join per round) whose
+    scheduler overhead dominates at small sizes (measured 3.6 s → ~0.3 s per ingest batch
     at sf0.1). Above the bound, the distributed fixpoint below runs
     unchanged — the 100 TB path never collects a corpus-scaled frame;
     the two strategies are equal by construction and pinned equal in
@@ -1178,14 +1140,14 @@ def greedy_earliest_survivors(
     untouched = all_nodes.join(touched, "node", "left_anti").withColumn(
         "state", F.lit(1)
     )
-    # one-job adaptive probe (see cluster_pairs): the greedy keep map
-    # sorts nodes itself, so collect order is irrelevant
-    probe = e.limit(driver_solve_max_edges + 1).collect()
-    if len(probe) <= driver_solve_max_edges:
-        spark = edges.sparkSession
-        keep = _greedy_keep_from_edges(probe)
-        decided = spark.createDataFrame(
-            [(n, 1 if k else -1) for n, k in sorted(keep.items())],
+    # the greedy keep map sorts nodes itself, so collect order is
+    # irrelevant
+    small = collect_if_small("greedy_earliest_survivors", e, _DRIVER_MAX_EDGES)
+    if small is not None:
+        keep = _greedy_keep_from_edges(small)
+        decided = local_frame(
+            edges.sparkSession,
+            {"node": list(keep), "state": [1 if k else -1 for k in keep.values()]},
             "node bigint, state int",
         )
         return decided.unionByName(untouched).select(
@@ -1238,10 +1200,6 @@ def incremental_minhash_dedup(
     n_store_buckets: int = 16,
     append: bool = True,
     path: str | None = None,
-    bloom_bits: int | None = 1 << 20,
-    bloom_min_store_bytes: int = 64 * 1024 * 1024,
-    driver_solve_max_hits: int = 500_000,
-    driver_solve_max_edges: int = 500_000,
 ) -> DataFrame:
     """Deduplicate a NEW batch of documents against a persisted MinHash
     signature store, then append the survivors' signatures — the
@@ -1273,11 +1231,16 @@ def incremental_minhash_dedup(
     Returns (doc_id, keep, matched_store); survivors' band buckets are
     appended to the store when ``append``.
 
-    ``bloom_min_store_bytes`` (r14): the Bloom prefilter only engages
-    once the store's on-disk size reaches this threshold — below it the
-    plain bucket join is already trivial and the filter build is pure
-    overhead; 0 forces the filter on whenever ``bloom_bits`` is set.
-    Results are bit-identical either way (tests/test_bloom.py).
+    Three size gates (``operators/adaptive.py``) pick the physical
+    plan; results are bit-identical on every branch
+    (tests/test_incremental_dedup.py, tests/test_bloom.py):
+
+    - the Bloom prefilter engages only once the store's on-disk size
+      exceeds ``_BLOOM_STORE_BYTES`` — below it the plain bucket
+      join is already trivial and the filter build is pure overhead;
+    - store hits up to ``_DRIVER_MAX_HITS`` rows and pruned batch match
+      edges up to ``_DRIVER_MAX_EDGES`` rows are decided on the driver
+      (see the inline note on the fast path).
     """
     spark = new_docs.sparkSession
     nb = minhash_band_buckets(
@@ -1296,7 +1259,7 @@ def incremental_minhash_dedup(
     # rows (driver-side file listing, no job; identical results — r12)
     store_files = store.inputFiles()
     if not store_files:
-        store_hits = spark.createDataFrame([], "doc_id bigint")
+        store_hits = local_frame(spark, {"doc_id": []}, "doc_id bigint")
     else:
         # Bloom pre-filter on the store probe: a fresh crawl's buckets
         # mostly MISS the store at scale, and the words table (≤ bits/64
@@ -1306,35 +1269,31 @@ def incremental_minhash_dedup(
         # tests/test_bloom.py); only the hits path uses the filtered
         # frame.
         #
-        # SIZE-GATED (r14): building the filter costs one store scan +
-        # a words aggregate + k probe joins — pure overhead while the
-        # store side is small enough that the plain bucket join is
-        # already trivial (measured ~2-3 s/batch at bench SF). The gate
-        # is the store's on-disk byte size from the same driver-side
-        # listing the bootstrap check uses (early-stop at the
-        # threshold); results are bit-identical either way.
+        # SIZE-GATED: the filter build (one store scan + a words
+        # aggregate + k probe joins) measured ~2-3 s/batch at bench SF.
+        # The gate reads the store's on-disk bytes from the bootstrap
+        # check's driver-side listing, stopping past the bound.
         nb_probe = nb
-        use_bloom = bloom_bits is not None
-        if use_bloom and bloom_min_store_bytes > 0:
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            jvm = spark.sparkContext._jvm
-            total = 0
-            fs = None
-            for f in store_files:
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                if fs is None:  # one FileSystem handle for the listing
-                    fs = p.getFileSystem(hconf)
-                # a file unlinked between inputFiles() and the stat
-                # (concurrent compaction/vacuum) counts as size 0 —
-                # the gate is a heuristic, never worth failing a batch
-                try:
-                    total += fs.getFileStatus(p).getLen()
-                except Exception:
-                    continue
-                if total >= bloom_min_store_bytes:
-                    break
-            use_bloom = total >= bloom_min_store_bytes
-        if use_bloom:
+        hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        jvm = spark.sparkContext._jvm
+        total = 0
+        fs = None
+        for f in store_files:
+            p = jvm.org.apache.hadoop.fs.Path(f)
+            if fs is None:  # one FileSystem handle for the listing
+                fs = p.getFileSystem(hconf)
+            # a file unlinked between inputFiles() and the stat
+            # (concurrent compaction/vacuum) counts as size 0 — the
+            # gate is a heuristic, never worth failing a batch
+            try:
+                total += fs.getFileStatus(p).getLen()
+            except Exception:
+                continue
+            if total > _BLOOM_STORE_BYTES:
+                break
+        if not on_driver(
+            "incremental_minhash_dedup.bloom", total, _BLOOM_STORE_BYTES
+        ):
             from etl_dag_spark.operators.bloom import (
                 bloom_filter_words,
                 bloom_prefilter,
@@ -1344,10 +1303,10 @@ def incremental_minhash_dedup(
             # joins otherwise re-executes the whole build subplan (store
             # scan + explode + bit_or) per broadcast exchange
             words = bloom_filter_words(
-                store, ["band", "bucket"], num_bits=bloom_bits
+                store, ["band", "bucket"], num_bits=_BLOOM_BITS
             ).localCheckpoint(eager=False)
             nb_probe = bloom_prefilter(
-                nb, words, ["band", "bucket"], num_bits=bloom_bits
+                nb, words, ["band", "bucket"], num_bits=_BLOOM_BITS
             )
 
         store_hits = (
@@ -1392,7 +1351,7 @@ def incremental_minhash_dedup(
 
     # ADAPTIVE fast path (r15, VERDICT r14 #2): when the store-hit set
     # and the in-batch match edges BOTH fit the driver bounds (one
-    # count each over already-pinned frames), every decision input
+    # limit probe each over already-pinned frames), every decision input
     # becomes a DRIVER value — store hits a collected id set, greedy
     # keep decisions the shared :func:`_greedy_keep_from_edges` map —
     # and the returned result frame is one scan of the batch plus two
@@ -1404,22 +1363,17 @@ def incremental_minhash_dedup(
     # after this batch's append cannot see the batch's own survivors
     # as store matches. Above either bound the r14 shape runs
     # unchanged — distributed greedy, eager checkpoint before append.
-    hit_ids: set[int] | None = None
+    hit_ids: set[int] | None = set()
     if store_files:
-        n_hits = store_hits.count()  # materializes + caches the persist
-        if n_hits <= driver_solve_max_hits:
-            hit_ids = {int(r["doc_id"]) for r in store_hits.collect()}
-    else:
-        hit_ids = set()
+        hits = collect_if_small(
+            "incremental_minhash_dedup.hits", store_hits, _DRIVER_MAX_HITS
+        )
+        hit_ids = None if hits is None else set(hits["doc_id"].to_pylist())
 
     keep_map: dict[int, bool] | None = None
     if hit_ids is not None:
-        spark_b = new_docs.sparkSession
+        dropped_df = local_frame(spark, {"node": sorted(hit_ids)}, "node bigint")
         if hit_ids:
-            # __db_ prefix: driver-built bounded leaf (hint audit)
-            dropped_df = spark_b.createDataFrame(
-                [(x,) for x in sorted(hit_ids)], "__db_node bigint"
-            ).select(F.col("__db_node").alias("node"))
             # edge endpoints are ⊆ batch ids by construction (the nb
             # self-join), so pruning edges to undecided×undecided is
             # exactly an anti-join against the dropped set — broadcast
@@ -1437,22 +1391,20 @@ def incremental_minhash_dedup(
         e_small = pruned.select(
             F.col("u").cast("bigint"), F.col("v").cast("bigint")
         ).localCheckpoint(eager=False)
-        e_probe = e_small.limit(driver_solve_max_edges + 1).collect()
-        if len(e_probe) <= driver_solve_max_edges:
-            keep_map = _greedy_keep_from_edges(e_probe)
+        small = collect_if_small(
+            "incremental_minhash_dedup.edges", e_small, _DRIVER_MAX_EDGES
+        )
+        if small is not None:
+            keep_map = _greedy_keep_from_edges(small)
 
     if keep_map is not None:
-        spark_b = new_docs.sparkSession
         if store_files:
             store_hits.unpersist()  # hit set captured as literal values
-        hits_df = spark_b.createDataFrame(
-            [(x,) for x in sorted(hit_ids)], "__db_node bigint"
-        ).select(F.col("__db_node").alias("node"), F.lit(True).alias("__sd"))
-        keep_df = spark_b.createDataFrame(
-            [(n, bool(k)) for n, k in sorted(keep_map.items())],
-            "__db_node bigint, __db_gk boolean",
-        ).select(
-            F.col("__db_node").alias("node"), F.col("__db_gk").alias("__gk")
+        hits_df = dropped_df.withColumn("__sd", F.lit(True))
+        keep_df = local_frame(
+            spark,
+            {"node": list(keep_map), "__gk": list(keep_map.values())},
+            "node bigint, __gk boolean",
         )
         result = (
             ids.join(F.broadcast(hits_df), "node", "left")
@@ -1473,9 +1425,7 @@ def incremental_minhash_dedup(
             non_surv = sorted(
                 hit_ids | {n for n, k in keep_map.items() if not k}
             )
-            ns_df = spark_b.createDataFrame(
-                [(x,) for x in non_surv], "__db_doc_id bigint"
-            ).select(F.col("__db_doc_id").alias("doc_id"))
+            ns_df = local_frame(spark, {"doc_id": non_surv}, "doc_id bigint")
             nb.join(F.broadcast(ns_df), "doc_id", "left_anti").write.mode(
                 "append"
             ).bucketBy(n_store_buckets, "band", "bucket").format(

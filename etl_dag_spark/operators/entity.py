@@ -29,7 +29,7 @@ transitive closure over verified pairs is the existing
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_dag_spark.operators.dedup import _ensure_bucketed_store, cluster_pairs
@@ -98,15 +98,15 @@ def resolve_entities(
     candidate pair is ``levenshtein(name_a, name_b) <= max_name_dist``
     AND equality on every ``exact_cols`` field.
 
-    r15 shape (guide §2.3 "aggregate before you shuffle"): ONE
-    ``collect_list`` aggregate folds each deletion-key bucket into a
-    sorted struct array — ``size(list)`` is exactly the key-row count
-    the old ``HAVING count(*) <= max_block`` filtered on, so the
-    df-cap, its join-back, the key-table checkpoint AND the a×b
-    self-join all collapse into a single partial-aggregated shuffle;
-    in-bucket i<j pairs are emitted map-side with posexplode + slice
-    (codegen). The pair distinct and the verify are unchanged, so the
-    candidate SET (and the replayed DuckDB oracle) is identical.
+    Shape: ONE shuffle on the deletion key. A windowed row count per
+    key (the ``HAVING count(*) <= max_block`` df cap) drops over-cap
+    keys BEFORE assembly, so a hot key's bucket is never built in one
+    aggregation buffer; a ``collect_list`` aggregate, reusing the
+    window's partitioning, then folds each capped bucket into a sorted
+    struct array, and in-bucket i<j pairs are emitted map-side with
+    posexplode + slice (codegen). The pair distinct and the verify are
+    unchanged, so the candidate SET (and the replayed DuckDB oracle) is
+    identical.
     """
     keep = [id_col, name_col, *exact_cols]
     keys = deletion_neighborhood_keys(
@@ -122,9 +122,10 @@ def resolve_entities(
     # runs become equal adjacent structs, removed by the _id < _id
     # filter — exactly what the old join's doc_id_a < doc_id_b did
     buckets = (
-        keys.groupBy("__k")
+        keys.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("__k")))
+        .where(F.col("__df") <= max_block)
+        .groupBy("__k")
         .agg(F.sort_array(F.collect_list(item)).alias("its"))
-        .where(F.size("its") <= max_block)
     )
     cand = (
         buckets.select("its", F.posexplode("its").alias("i", "a"))

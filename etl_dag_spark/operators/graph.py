@@ -20,14 +20,19 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_dag_spark.operators.adaptive import collect_if_small, local_frame
+
 _RANKS = "node string, rank double"
+# edge lists up to this many rows are solved on the driver
+_DRIVER_MAX_EDGES = 500_000
 
 
-def _local_frame(edges: DataFrame, columns: dict[str, pa.Array], schema: str) -> DataFrame:
-    """A driver-solved result as a local relation built from Arrow
-    columns: reading it runs no Python worker, unlike a frame created
-    from a list of rows (a ``Scan ExistingRDD`` of pickled rows)."""
-    return edges.sparkSession.createDataFrame(pa.table(columns), schema)
+def _ranks(edges: DataFrame, nodes: list[str], rank) -> DataFrame:
+    return local_frame(
+        edges.sparkSession,
+        {"node": pa.array(nodes, pa.string()), "rank": pa.array(rank, pa.float64())},
+        _RANKS,
+    )
 
 
 def bfs_distances(
@@ -36,17 +41,16 @@ def bfs_distances(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 50,
-    driver_solve_max_edges: int = 500_000,
 ) -> DataFrame:
     """Multi-source BFS hop distances over a directed edge list —
     cycle-safe (every node is discovered exactly once, at its minimum
     hop count) → (node, dist INT); nodes unreachable from ``sources``
     are absent.
 
-    ADAPTIVE physical strategy (r14, the greedy_earliest_survivors
-    pattern): when the deduplicated edge list is at most
-    ``driver_solve_max_edges`` rows (one count over the persisted edge
-    frame), the exact BFS runs DRIVER-SIDE over the collected adjacency
+    ADAPTIVE physical strategy (``operators/adaptive.py``): when the
+    deduplicated edge list is at most ``_DRIVER_MAX_EDGES`` rows (one
+    ``limit`` probe of the persisted edge frame that also delivers the
+    rows), the exact BFS runs DRIVER-SIDE over the collected adjacency
     list — hop counts are integers, so the two paths are bit-equal by
     construction (pinned in tests/test_graph.py); the per-level Spark
     jobs of the distributed loop are pure scheduler overhead on small
@@ -71,17 +75,13 @@ def bfs_distances(
         F.col(src_col).cast("string").alias("src"),
         F.col(dst_col).cast("string").alias("dst"),
     ).distinct().persist()
-    # one-job adaptive probe (r15, the cluster_pairs pattern):
-    # limit(bound+1) answers the gate AND delivers the rows — BFS hop
-    # counts are insensitive to adjacency order
-    probe = e.limit(driver_solve_max_edges + 1).collect()
-    if len(probe) <= driver_solve_max_edges:
-        try:
-            adj: dict[str, list[str]] = {}
-            for r in probe:
-                adj.setdefault(r["src"], []).append(r["dst"])
-        finally:
-            e.unpersist()
+    # BFS hop counts are insensitive to adjacency order
+    small = collect_if_small("bfs_distances", e, _DRIVER_MAX_EDGES)
+    if small is not None:
+        e.unpersist()
+        adj: dict[str, list[str]] = {}
+        for u, v in zip(small["src"].to_pylist(), small["dst"].to_pylist()):
+            adj.setdefault(u, []).append(v)
         srcs = [
             r["node"]
             for r in sources.select(
@@ -109,7 +109,7 @@ def bfs_distances(
             "node": pa.array(nodes, pa.string()),
             "dist": pa.array([dist[v] for v in nodes], pa.int32()),
         }
-        return _local_frame(edges, columns, "node string, dist int")
+        return local_frame(edges.sparkSession, columns, "node string, dist int")
     try:
         visited = (
             sources.select(F.col(sources.columns[0]).cast("string").alias("node"))
@@ -146,7 +146,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    driver_solve_max_edges: int = 500_000,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list, fixed ``n_iter``
     power iterations (the production form: a fixed sweep count, not a
@@ -161,7 +160,7 @@ def pagerank(
     re-cast ``node`` back, or the join silently runs under Spark's
     string-vs-number DOUBLE coercion.
 
-    ADAPTIVE: edge lists at most ``driver_solve_max_edges`` rows after
+    ADAPTIVE: edge lists at most ``_DRIVER_MAX_EDGES`` rows after
     folding solve driver-side in numpy (see the inline note); larger
     graphs run the distributed loop: per iteration, contribution =
     rank · w/out_w per edge, one groupBy shuffle on the destination;
@@ -181,37 +180,27 @@ def pagerank(
         .agg(F.sum("w").alias("w"))
         .persist()
     )
-    # ADAPTIVE physical strategy (r14, the greedy_earliest_survivors
-    # pattern): when the folded edge list fits under the bound, the
-    # power iteration runs DRIVER-SIDE in numpy with the identical
-    # update rule — the per-sweep Spark jobs (join + groupBy + two
-    # checkpoint materializations) are pure scheduler overhead on small
-    # graphs. Float sums accumulate in edge order instead of Spark's
-    # partition order; both are within the reduction-order noise the
-    # operator already carries (rows-only registration; the numpy
-    # reference in tests/test_graph.py agrees to <=1e-9 with BOTH).
-    # Above the bound the distributed loop runs unchanged — the 100 TB
-    # path never collects an SF-scaled edge list.
-    n_edges = e.count()
-    if n_edges == 0:
-        e.unpersist()
-        return _local_frame(
-            edges, {"node": pa.array([], pa.string()), "rank": pa.array([], pa.float64())}, _RANKS
-        )
-    if n_edges <= driver_solve_max_edges:
+    # Driver solve: the identical update rule in numpy, without the
+    # per-sweep jobs (join + groupBy + two checkpoints) that are pure
+    # scheduler overhead on small graphs. Float sums accumulate in the
+    # persisted frame's collect order instead of Spark's partition
+    # order; both are within the reduction-order noise the operator
+    # already carries (the numpy reference in tests/test_graph.py
+    # agrees to <=1e-9 with BOTH).
+    small = collect_if_small("pagerank", e, _DRIVER_MAX_EDGES, ordered=True)
+    if small is not None:
         import numpy as np
 
-        try:
-            rows = e.collect()
-        finally:
-            e.unpersist()
-        node_list = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
+        e.unpersist()
+        if small.num_rows == 0:
+            return _ranks(edges, [], [])
+        src, dst = small["src"].to_pylist(), small["dst"].to_pylist()
+        node_list = sorted(set(src) | set(dst))
         idx = {v: i for i, v in enumerate(node_list)}
         n = len(node_list)
-        m = len(rows)
-        src_i = np.fromiter((idx[r["src"]] for r in rows), dtype=np.int64, count=m)
-        dst_i = np.fromiter((idx[r["dst"]] for r in rows), dtype=np.int64, count=m)
-        wv = np.fromiter((float(r["w"]) for r in rows), dtype=np.float64, count=m)
+        src_i = np.fromiter((idx[v] for v in src), dtype=np.int64, count=len(src))
+        dst_i = np.fromiter((idx[v] for v in dst), dtype=np.int64, count=len(dst))
+        wv = small["w"].to_numpy()
         out_w = np.zeros(n)
         np.add.at(out_w, src_i, wv)
         # Degenerate-input alignment (r15, ADVICE r14): a src whose
@@ -231,16 +220,14 @@ def pagerank(
             dm = float(rank[dangling].sum())
             rank = (1.0 - damping) / n + (damping / n) * dm + damping * contrib
         # idx enumerates node_list, so rank is already in node order
-        return _local_frame(
-            edges, {"node": pa.array(node_list, pa.string()), "rank": pa.array(rank)}, _RANKS
-        )
+        return _ranks(edges, node_list, rank)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
         .persist()
     )
-    n = nodes.count()
+    n = max(nodes.count(), 1)  # an empty graph sweeps over no nodes
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     # normalized edge transition weights: one frame reused every sweep
     trans = (

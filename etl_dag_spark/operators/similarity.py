@@ -31,11 +31,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_dag_spark.functions.vectors import dim_of, dot_fixed, norm_fixed
+from etl_dag_spark.operators.adaptive import on_driver
 
 # Emission margin below the user threshold inside the Python worker;
 # the authoritative rounded-compare happens JVM-side afterwards, so a
 # float at the exact boundary can never be lost to rounding-mode skew.
 _EDGE = 1e-9
+# distributed_kmeans solves on the driver up to this many quantized cells
+_KMEANS_DRIVER_MAX_CELLS = 2_000_000
 
 
 def _seq_dot_block(c_mat: np.ndarray, q_mat: np.ndarray) -> np.ndarray:
@@ -1264,8 +1267,6 @@ def distributed_kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant: int = 1_000_000,
-    driver_solve_max_rows: int = 250_000,
-    driver_solve_max_cells: int = 2_000_000,
 ) -> tuple[DataFrame, list[list[int]], list[int]]:
     """Full-corpus Lloyd's k-means — the scale-out twin of the
     capped-sample codebook trainer (``_kmeans_centroids``): that one
@@ -1300,11 +1301,11 @@ def distributed_kmeans(
     q = _spread(quantized_vectors(embeddings, id_col, vec_col, quant)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # ADAPTIVE sweep loop (r14, the greedy_earliest_survivors pattern):
+    # ADAPTIVE sweep loop (operators/adaptive.py):
     # Lloyd's ITERATION STATE is only the k×dim centroid table, but
     # each distributed sweep costs one Arrow pass + one k·dim shuffle +
     # one collect — pure scheduler overhead when the quantized corpus
-    # itself fits the driver. Under the row bound, collect q ONCE and
+    # itself fits the driver. Under the bound, collect q ONCE and
     # run the identical integer sweeps in numpy (same floor(Σ/n) double
     # division, same first-minimum argmin — the literal arithmetic
     # tests/test_kmeans.py already replays); the FINAL assignment still
@@ -1317,13 +1318,17 @@ def distributed_kmeans(
     # int64 CELLS and the numpy sweep temporaries are n·k·dim — a row
     # bound alone under-protects at high dim (250k rows of dim-64 is
     # ~1 GB of sweep temporaries). Fold max(size(q)) into the same
-    # count job (no extra action) and gate on rows AND cells.
+    # count job (no extra action) and gate on cells, charging every row
+    # at least 8 cells — which also caps the rows at 250k.
     _stat = q.agg(
         F.count(F.lit(1)).alias("n"), F.max(F.size("q")).alias("d")
     ).first()
     n_rows = int(_stat["n"])
     dim = int(_stat["d"]) if _stat["d"] is not None else 0
-    if n_rows <= driver_solve_max_rows and n_rows * dim <= driver_solve_max_cells:
+    driver = on_driver(
+        "distributed_kmeans", n_rows * max(dim, 8), _KMEANS_DRIVER_MAX_CELLS
+    )
+    if driver:
         import hashlib
 
         pdf = q.toPandas()
@@ -1421,7 +1426,7 @@ def distributed_kmeans(
 
         return upd
 
-    if n_rows > driver_solve_max_rows or n_rows * dim > driver_solve_max_cells:
+    if not driver:
         for _ in range(sweeps):
             upd = (
                 q.mapInPandas(updater(centroids), "cluster int, dim int, s long, n long")

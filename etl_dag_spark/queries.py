@@ -7013,7 +7013,13 @@ def olap_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, the standard CMS sizing rule). Deterministic integer
     arithmetic end-to-end — the DuckDB oracle replays both sketches
     bit-for-bit via the portable md5 position hash; bounds also pinned
-    in tests/test_sketch.py."""
+    in tests/test_sketch.py.
+
+    Empty input: with an empty ``orders`` or ``lineitem`` the query
+    still returns ONE row, all four columns NULL — no sketch cell is
+    common, no key joins, and the empty side's size is a sum over no
+    rows — exactly as the oracle's scalar CTEs do (pinned over empty
+    tables in tests/test_sketch.py)."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("string").alias("key")
     )

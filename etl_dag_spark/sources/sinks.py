@@ -27,26 +27,18 @@ def overwrite_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    buckets: tuple[int, str] | None = None,
 ) -> None:
     """Truncate-and-load a parquet dataset.
 
     ``partition_by``: directory partitioning → partition pruning for
-    readers filtering on those columns.
-    ``buckets``: (n, col) — placeholder for bucketed saveAsTable form;
-    bucketing co-locates both sides of a recurring join key so the join
-    never shuffles. Requires a metastore table, so exposed separately.
+    readers filtering on those columns. Bucketed writes need a metastore
+    table: see :func:`overwrite_bucketed_table`.
     """
     writer = df.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if buckets is not None:
-        raise NotImplementedError(
-            "bucketed writes need saveAsTable + a metastore; use "
-            "overwrite_bucketed_table"
-        )
     writer.parquet(path)
 
 

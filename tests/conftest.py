@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
@@ -20,3 +21,32 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def both_paths(caplog, monkeypatch):
+    """``both_paths(fn, auto, forced=auto)`` runs ``fn()`` twice: as the
+    adaptive size gates (operators/adaptive.py) decide, then with every
+    gate forced distributed. From the gates' DEBUG records it asserts
+    that the first run took the driver branch at exactly the gates named
+    in ``auto`` and the forced run the distributed branch at those in
+    ``forced``, so a pin can never compare one path with itself. Returns
+    both results."""
+    from etl_dag_spark.operators import adaptive
+
+    caplog.set_level(logging.DEBUG, logger=adaptive.__name__)
+
+    def run(fn, auto, forced=None):
+        results = []
+        for force, ops in ((False, auto), (True, forced or auto)):
+            monkeypatch.setattr(adaptive, "FORCE_DISTRIBUTED", force)
+            caplog.clear()
+            results.append(fn())
+            branch = "distributed" if force else "driver"
+            logged = {
+                r.args[:2] for r in caplog.records if r.name == adaptive.__name__
+            }
+            assert logged == {(op, branch) for op in ops}, logged
+        return results
+
+    return run

@@ -88,9 +88,11 @@ def test_empty_words_table_drops_everything(spark):
     assert bloom_prefilter(probe, words, ["v"]).count() == 0
 
 
-def test_incremental_dedup_identical_with_and_without_bloom(spark, tmp_path):
+def test_incremental_dedup_identical_with_and_without_bloom(spark, tmp_path, both_paths):
     """The prefilter may only remove definitely-absent probes, so the
-    dedup decisions must be bit-identical either way."""
+    dedup decisions must be bit-identical either way. The store is far
+    below the Bloom size gate, so the filter engages only when the
+    gates are forced distributed."""
     from etl_dag_spark.operators.dedup import incremental_minhash_dedup
     from etl_dag_spark.sources.tables import load_table
 
@@ -102,20 +104,19 @@ def test_incremental_dedup_identical_with_and_without_bloom(spark, tmp_path):
         (F.col("doc_id") + off).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" tail")).alias("text"),
     )
-    outs = []
-    # bloom_min_store_bytes=0 disables the r14 size gate so the bloom
-    # variant genuinely exercises the prefilter at test scale
-    for label, bits in (("bloom", 1 << 20), ("nobloom", None)):
+    labels = iter(["nobloom", "bloom"])
+
+    def run():
+        label = next(labels)
         spark.sql(f"DROP TABLE IF EXISTS t_bloom_{label}")
-        incremental_minhash_dedup(
-            d, f"t_bloom_{label}", path=str(tmp_path / label), bloom_bits=bits,
-            bloom_min_store_bytes=0,
-        )
-        res = incremental_minhash_dedup(
-            copies, f"t_bloom_{label}", path=str(tmp_path / label), bloom_bits=bits,
-            bloom_min_store_bytes=0,
-        )
-        outs.append({r.doc_id: (r.keep, r.matched_store) for r in res.collect()})
+        path = str(tmp_path / label)
+        incremental_minhash_dedup(d, f"t_bloom_{label}", path=path)
+        res = incremental_minhash_dedup(copies, f"t_bloom_{label}", path=path)
+        out = {r.doc_id: (r.keep, r.matched_store) for r in res.collect()}
         spark.sql(f"DROP TABLE IF EXISTS t_bloom_{label}")
+        return out
+
+    gates = {f"incremental_minhash_dedup.{g}" for g in ("bloom", "hits", "edges")}
+    outs = both_paths(run, gates, gates | {"greedy_earliest_survivors"})
     assert outs[0] == outs[1]
     assert any(ms for _, ms in outs[0].values())  # the store actually matched

@@ -132,20 +132,16 @@ def test_word_type_cap_bounds_state(spark):
     assert word_type_table(docs, max_word_types=5).count() == 5
 
 
-def test_adaptive_paths_learn_identical_merges(spark):
-    """The r15 driver-solve path (bounded word-type collect +
-    incremental dictionary BPE) and the forced distributed merge loop
-    (driver_solve_max_word_types=0) must learn the identical merge
-    table — rank, pair, merged symbol, and count."""
+def test_adaptive_paths_learn_identical_merges(spark, both_paths):
+    """The driver-solve path (bounded word-type collect + incremental
+    dictionary BPE) and the forced distributed merge loop must learn
+    the identical merge table — rank, pair, merged symbol, and count."""
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    drv = [
-        (r.rank, r.left, r.right, r.merged, r.pair_count)
-        for r in train_bpe(docs, num_merges=6).orderBy("rank").collect()
-    ]
-    dist = [
-        (r.rank, r.left, r.right, r.merged, r.pair_count)
-        for r in train_bpe(docs, num_merges=6, driver_solve_max_word_types=0)
-        .orderBy("rank")
-        .collect()
-    ]
+    drv, dist = both_paths(
+        lambda: [
+            (r.rank, r.left, r.right, r.merged, r.pair_count)
+            for r in train_bpe(docs, num_merges=6).orderBy("rank").collect()
+        ],
+        {"train_bpe"},
+    )
     assert drv == dist and len(drv) == 6

@@ -257,10 +257,9 @@ def test_cluster_pairs_components(spark):
     }
 
 
-def test_cluster_pairs_adaptive_paths_equal(spark):
-    """The r14 adaptive driver-solve (union-find over collected edges)
-    and the forced distributed min-label fixpoint
-    (driver_solve_max_edges=0) produce IDENTICAL clusters — including a
+def test_cluster_pairs_adaptive_paths_equal(spark, both_paths):
+    """The adaptive driver-solve (union-find over collected edges) and
+    the forced distributed min-label fixpoint produce IDENTICAL clusters — including a
     long chain (propagation depth > 1 round) and ids arriving in
     arbitrary edge order."""
     docs = spark.createDataFrame(
@@ -273,16 +272,13 @@ def test_cluster_pairs_adaptive_paths_equal(spark):
          (9, 10), (10, 11), (9, 11), (8, 14)],
         "doc_id_a long, doc_id_b long",
     )
-    fast = {
-        (r.doc_id, r.cluster_id, r.is_canonical)
-        for r in dd.cluster_pairs(pairs, docs).collect()
-    }
-    dist = {
-        (r.doc_id, r.cluster_id, r.is_canonical)
-        for r in dd.cluster_pairs(
-            pairs, docs, driver_solve_max_edges=0
-        ).collect()
-    }
+    fast, dist = both_paths(
+        lambda: {
+            (r.doc_id, r.cluster_id, r.is_canonical)
+            for r in dd.cluster_pairs(pairs, docs).collect()
+        },
+        {"cluster_pairs"},
+    )
     assert fast == dist
     assert (1, 1, True) in fast and (7, 1, False) in fast
 

@@ -164,6 +164,24 @@ def test_hot_block_cap_drops_boilerplate_keys(spark):
     assert out[101].entity_id == 100  # small blocks still link
 
 
+def test_mega_bucket_yields_no_pair_and_ordinary_pairs_link(spark):
+    """One deletion key shared by thousands of records: "mega" plus one
+    distinct character each, so every two of them are at distance 1 yet
+    meet only in the "mega" bucket. That bucket is over the cap, so it
+    yields no pair and each record stays a singleton, while an ordinary
+    near-duplicate pair still links."""
+    n = 3000
+    rows = [(i, "mega" + chr(0x4E00 + i), 1) for i in range(n)] + [
+        (10_000, "unique one", 2),
+        (10_001, "unique on", 2),
+    ]
+    out = _resolve(spark, rows)
+    assert all(
+        (out[i].entity_id, out[i].n_members) == (i, 1) for i in range(n)
+    )
+    assert out[10_001].entity_id == 10_000 and out[10_000].n_members == 2
+
+
 def test_incremental_resolve_persists_capped_records(spark, tmp_path):
     """Records whose every candidate key is df-capped (boilerplate
     names) must still reach the store: matching degrades (no links this

@@ -60,12 +60,13 @@ def test_pagerank_matches_numpy_reference(spark, edges):
 
 
 @pytest.mark.parametrize("edges", CASES)
-def test_pagerank_adaptive_paths_agree(spark, edges):
-    """The r14 driver-side numpy solve and the forced distributed loop
-    (driver_solve_max_edges=0) agree to the reduction-order tolerance
-    the operator already carries (<=1e-9; rows-only registration)."""
-    fast = _run(spark, edges, damping=0.85, n_iter=10)
-    dist = _run(spark, edges, damping=0.85, n_iter=10, driver_solve_max_edges=0)
+def test_pagerank_adaptive_paths_agree(spark, edges, both_paths):
+    """The driver-side numpy solve and the forced distributed loop
+    agree to the reduction-order tolerance the operator already carries
+    (<=1e-9; rows-only registration)."""
+    fast, dist = both_paths(
+        lambda: _run(spark, edges, damping=0.85, n_iter=10), {"pagerank"}
+    )
     assert set(fast) == set(dist)
     for v in fast:
         assert fast[v] == pytest.approx(dist[v], abs=1e-9)
@@ -141,10 +142,9 @@ def test_bfs_distances_cycle_safe_min_hops(spark):
     assert got == {"s": 0, "a": 1, "b": 1, "c": 2, "d": 3, "e": 4}
 
 
-def test_bfs_distances_adaptive_paths_equal(spark):
-    """The r14 driver-side BFS and the forced distributed loop
-    (driver_solve_max_edges=0) are bit-equal — hop counts are
-    integers."""
+def test_bfs_distances_adaptive_paths_equal(spark, both_paths):
+    """The driver-side BFS and the forced distributed loop are
+    bit-equal — hop counts are integers."""
     from etl_dag_spark.operators.graph import bfs_distances
 
     edges = spark.createDataFrame(
@@ -153,13 +153,10 @@ def test_bfs_distances_adaptive_paths_equal(spark):
         "src string, dst string",
     )
     sources = spark.createDataFrame([("s",)], "node string")
-    fast = {(r.node, r.dist) for r in bfs_distances(edges, sources).collect()}
-    dist = {
-        (r.node, r.dist)
-        for r in bfs_distances(
-            edges, sources, driver_solve_max_edges=0
-        ).collect()
-    }
+    fast, dist = both_paths(
+        lambda: {(r.node, r.dist) for r in bfs_distances(edges, sources).collect()},
+        {"bfs_distances"},
+    )
     assert fast == dist
 
 

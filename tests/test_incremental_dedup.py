@@ -163,43 +163,32 @@ def test_store_side_bucket_join_is_exchange_free(spark, corpus):
     assert plan.count("Exchange") <= 2, plan
 
 
-def test_adaptive_fast_path_equals_forced_distributed(spark, corpus):
-    """The r15 driver fast path (collected store hits + driver greedy,
-    no result checkpoint) and the forced distributed shape
-    (driver_solve_max_hits=-1 → store hits stay a frame, distributed
-    greedy, eager checkpoint before append) must produce identical
-    keep/matched_store decisions batch for batch. The gates are ``<=``,
-    so the force is -1: a batch with no store hits or no edges would
-    pass a 0 bound and take the fast path on both sides."""
+def test_adaptive_fast_path_equals_forced_distributed(spark, corpus, both_paths):
+    """The driver fast path (no Bloom filter on a small store, collected
+    store hits + driver greedy, no result checkpoint) and the forced
+    distributed shape (Bloom filter on, store hits stay a frame,
+    distributed greedy, eager checkpoint before append) must produce
+    identical keep/matched_store decisions batch for batch. The first
+    batch reaches only the edge gate (an empty store has no hits to
+    probe); the second reaches all three; the forced side also reaches
+    the distributed greedy's own gate."""
     _drop(spark, "t_fast", "t_dist")
     mid = corpus.agg(F.max("doc_id")).first()[0] // 2
     halves = [
         corpus.where(F.col("doc_id") <= mid),
         corpus.where(F.col("doc_id") > mid),
     ]
-    fast, dist = [], []
-    for h in halves:
-        fast.append(
-            incremental_minhash_dedup(h, "t_fast", bloom_min_store_bytes=0)
-        )
-        dist.append(
-            incremental_minhash_dedup(
-                h,
-                "t_dist",
-                bloom_min_store_bytes=0,
-                driver_solve_max_hits=-1,
-                driver_solve_max_edges=-1,
-            )
-        )
-    got_f = {
-        (r.doc_id, r.keep, r.matched_store)
-        for b in fast
-        for r in b.collect()
-    }
-    got_d = {
-        (r.doc_id, r.keep, r.matched_store)
-        for b in dist
-        for r in b.collect()
-    }
+    stores = iter(["t_fast", "t_dist"])
+
+    def run():
+        store = next(stores)
+        return {
+            (r.doc_id, r.keep, r.matched_store)
+            for h in halves
+            for r in incremental_minhash_dedup(h, store).collect()
+        }
+
+    gates = {f"incremental_minhash_dedup.{g}" for g in ("bloom", "hits", "edges")}
+    got_f, got_d = both_paths(run, gates, gates | {"greedy_earliest_survivors"})
     assert got_f == got_d and len(got_f) > 0
     _drop(spark, "t_fast", "t_dist")

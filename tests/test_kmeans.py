@@ -94,20 +94,24 @@ def test_kmeans_bit_equal_real_embeddings(spark):
     assert not mism, mism[:5]
 
 
-def test_kmeans_adaptive_paths_bit_equal(spark):
-    """The r14 driver-side sweep loop (collect-once numpy iteration)
-    and the forced distributed sweeps (driver_solve_max_rows=0) produce
-    bit-identical seeds, centroids, and assignments — the arithmetic is
-    integer end-to-end with the same floor(Σ/n) double division."""
+def test_kmeans_adaptive_paths_bit_equal(spark, both_paths):
+    """The driver-side sweep loop (collect-once numpy iteration) and
+    the forced distributed sweeps produce bit-identical seeds,
+    centroids, and assignments — the arithmetic is integer end-to-end
+    with the same floor(Σ/n) double division."""
     e = load_table(spark, SF_DIR, "embeddings")
-    a_fast, c_fast, s_fast = distributed_kmeans(e, k=5, sweeps=3)
-    a_dist, c_dist, s_dist = distributed_kmeans(
-        e, k=5, sweeps=3, driver_solve_max_rows=0
+
+    def run():
+        a, c, s = distributed_kmeans(e, k=5, sweeps=3)
+        return a.collect(), c, s
+
+    (a_fast, c_fast, s_fast), (a_dist, c_dist, s_dist) = both_paths(
+        run, {"distributed_kmeans"}
     )
     assert s_fast == s_dist
     assert c_fast == c_dist
-    r_fast = {r["vec_id"]: (r["cluster"], r["dist_sq"]) for r in a_fast.collect()}
-    r_dist = {r["vec_id"]: (r["cluster"], r["dist_sq"]) for r in a_dist.collect()}
+    r_fast = {r["vec_id"]: (r["cluster"], r["dist_sq"]) for r in a_fast}
+    r_dist = {r["vec_id"]: (r["cluster"], r["dist_sq"]) for r in a_dist}
     assert r_fast == r_dist
 
 

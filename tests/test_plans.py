@@ -110,17 +110,6 @@ def _bounded_output(node) -> bool:
         return True
     if sn in _UNSCALED_LEAVES:
         return True
-    if sn == "LogicalRDD":
-        # Reserved-prefix leaf (r15, the __pid convention): a
-        # LogicalRDD whose EVERY output attribute is named __db_* is a
-        # driver-built local collection from a size-gated collect
-        # (driver_solve bounds in dedup.py) — bounded by the gate that
-        # built it. localCheckpoint leaves keep their natural column
-        # names, so the r12 "never checkpoint a frame you intend to
-        # broadcast" protection still rejects those.
-        out = node.output()
-        names = [out.apply(i).name() for i in range(out.size())]
-        return bool(names) and all(n.startswith("__db_") for n in names)
     if sn == "LogicalRelation":
         head = node.toString().splitlines()[0]
         return "n_nationkey" in head or "r_regionkey" in head
@@ -196,7 +185,10 @@ def test_bounded_output_rejects_round6_offender_shapes(spark):
     aggregate grouped by a corpus-scaled key (text_rarity_score's token
     vocabulary), (b) a corpus-scaled stream merely FILTERED by a join
     against a bounded aggregate (dedup_contamination's eval slice under
-    the hot-shingle cap)."""
+    the hot-shingle cap) — and (c) a frame built from a list of rows,
+    whose LogicalRDD leaf looks the same as a checkpointed SF-scaled
+    frame (driver-built bounded frames are Arrow local relations,
+    operators/adaptive.py::local_frame)."""
     from etl_dag_spark.sources.tables import load_table
 
     d = load_table(spark, SF, "documents")
@@ -210,7 +202,12 @@ def test_bounded_output_rejects_round6_offender_shapes(spark):
     ok = d.groupBy("lang").agg(F.count(F.lit(1)).alias("df")).select("lang")
     ev = d.where(F.col("doc_id") % 20 == 0).join(ok, "lang")
     plan_b = d.join(F.broadcast(ev), "doc_id")._jdf.queryExecution().analyzed()
-    for label, plan in (("vocab-agg", plan_a), ("filtered-slice", plan_b)):
+    # (c) row-built frame
+    rows = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
+    plan_c = d.join(F.broadcast(rows), "doc_id")._jdf.queryExecution().analyzed()
+    for label, plan in (
+        ("vocab-agg", plan_a), ("filtered-slice", plan_b), ("row-built", plan_c)
+    ):
         hints = [
             n for n in _walk(plan)
             if n.getClass().getSimpleName() == "ResolvedHint"

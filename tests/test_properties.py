@@ -239,7 +239,7 @@ def greedy_graph(draw):
 
 @given(case=greedy_graph())
 @settings(**_SETTINGS)
-def test_greedy_survivors_matches_sequential_reference(spark, case):
+def test_greedy_survivors_matches_sequential_reference(spark, both_paths, case):
     """greedy_earliest_survivors (distributed fixpoint) must equal the
     literal sequential greedy it models: process ids ascending, drop a
     node iff it matches an already-KEPT earlier node."""
@@ -259,18 +259,17 @@ def test_greedy_survivors_matches_sequential_reference(spark, case):
         else spark.createDataFrame([], "u long, v long")
     )
     nodes = spark.range(1, n + 1).select(F.col("id").alias("node"))
-    # r14: the operator is adaptive — a small matched subgraph solves
+    # the operator is adaptive — a small matched subgraph solves
     # driver-side, a large one runs the distributed fixpoint. Pin BOTH
-    # strategies equal to the sequential reference (max_edges=0 forces
-    # the distributed path no matter the size).
-    got = {r.node: r.keep for r in greedy_earliest_survivors(e_df, nodes).collect()}
+    # strategies equal to the sequential reference.
+    got, got_dist = both_paths(
+        lambda: {
+            r.node: r.keep
+            for r in greedy_earliest_survivors(e_df, nodes).collect()
+        },
+        {"greedy_earliest_survivors"},
+    )
     assert got == want
-    got_dist = {
-        r.node: r.keep
-        for r in greedy_earliest_survivors(
-            e_df, nodes, driver_solve_max_edges=0
-        ).collect()
-    }
     assert got_dist == want
 
 

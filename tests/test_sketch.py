@@ -109,6 +109,35 @@ def test_join_size_estimate_disjoint_keys_small(spark):
     assert 0 <= est <= (2.72 / WIDTH) * na * nb
 
 
+def test_join_size_estimate_query_on_empty_tables_matches_oracle(spark, tmp_path):
+    """olap_join_size_estimate over an empty orders and lineitem returns
+    ONE row with est, exact, error_bound and within_bound all NULL — the
+    DuckDB oracle's scalar CTEs give the same row, compared the way the
+    driver compares (tools/driver_sim.py)."""
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from etl_dag_spark.queries import ORACLES, SPARK_QUERIES
+    from tests.conftest import SF_DIR
+    from tools.driver_sim import normalize, values_equal
+
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        path = str(tmp_path / f"{t}.parquet")
+        pq.write_table(pq.read_schema(os.path.join(SF_DIR, f"{t}.parquet")).empty_table(), path)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    name = "olap_join_size_estimate"
+    got = normalize(SPARK_QUERIES[name](spark, str(tmp_path)).toPandas())
+    want = normalize(con.execute(ORACLES[name]).fetchdf())
+    assert list(got.columns) == list(want.columns)
+    assert len(got) == len(want) == 1
+    for c in got.columns:
+        assert values_equal(got[c][0], want[c][0]), (c, got[c][0], want[c][0])
+        assert values_equal(got[c][0], None), (c, got[c][0])
+
+
 # ------------------------------------------------------- HyperLogLog
 
 
