@@ -28,18 +28,14 @@ def on_driver(op: str, observed: int | None, bound: int) -> bool:
     return driver
 
 
-def collect_if_small(
-    op: str, df: DataFrame, bound: int, ordered: bool = False
-) -> pa.Table | None:
+def collect_if_small(op: str, df: DataFrame, bound: int) -> pa.Table | None:
     """``df`` as an Arrow table if it has at most ``bound`` rows, else
     None. One ``limit(bound + 1)`` job answers the gate and delivers the
-    rows in no set order; ``ordered=True`` counts, then collects in
-    ``collect()`` order (stable for a persisted frame)."""
+    rows in no set order: a consumer whose result depends on row order
+    (float sums) sorts them first."""
     if FORCE_DISTRIBUTED:
         on_driver(op, None, bound)
         return None
-    if ordered:
-        return df.toArrow() if on_driver(op, df.count(), bound) else None
     rows = df.limit(bound + 1).toArrow()
     return rows if on_driver(op, rows.num_rows, bound) else None
 

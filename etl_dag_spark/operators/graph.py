@@ -161,7 +161,9 @@ def pagerank(
     string-vs-number DOUBLE coercion.
 
     ADAPTIVE: edge lists at most ``_DRIVER_MAX_EDGES`` rows after
-    folding solve driver-side in numpy (see the inline note); larger
+    folding solve driver-side in numpy, where the float sums accumulate
+    in sorted ``(src, dst)`` edge order, so the driver result is the
+    same bits under any partitioning (see the inline note); larger
     graphs run the distributed loop: per iteration, contribution =
     rank · w/out_w per edge, one groupBy shuffle on the destination;
     dangling mass is a SCALAR (one-row aggregate collected) folded
@@ -182,18 +184,19 @@ def pagerank(
     )
     # Driver solve: the identical update rule in numpy, without the
     # per-sweep jobs (join + groupBy + two checkpoints) that are pure
-    # scheduler overhead on small graphs. Float sums accumulate in the
-    # persisted frame's collect order instead of Spark's partition
-    # order; both are within the reduction-order noise the operator
-    # already carries (the numpy reference in tests/test_graph.py
-    # agrees to <=1e-9 with BOTH).
-    small = collect_if_small("pagerank", e, _DRIVER_MAX_EDGES, ordered=True)
+    # scheduler overhead on small graphs. The collect arrives in no set
+    # order, so the edges are sorted by their unique (src, dst) key
+    # first: float sums then accumulate in one canonical order, whatever
+    # the partitioning (the numpy reference in tests/test_graph.py
+    # agrees to <=1e-9 with both paths).
+    small = collect_if_small("pagerank", e, _DRIVER_MAX_EDGES)
     if small is not None:
         import numpy as np
 
         e.unpersist()
         if small.num_rows == 0:
             return _ranks(edges, [], [])
+        small = small.sort_by([("src", "ascending"), ("dst", "ascending")])
         src, dst = small["src"].to_pylist(), small["dst"].to_pylist()
         node_list = sorted(set(src) | set(dst))
         idx = {v: i for i, v in enumerate(node_list)}

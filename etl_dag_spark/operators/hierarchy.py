@@ -12,13 +12,32 @@ frontier is persisted so lineage doesn't re-execute; termination is
 detected from the frontier's count — an aggregate, never data to the
 driver. Total work is O(edges × depth); depth for org charts and
 region/nation/customer trees is small and bounded by ``max_iter``.
+
+``ancestor_chain`` is gated (``operators/adaptive.py``): when nodes and
+edges each have at most ``_DRIVER_MAX_ROWS`` rows, ids are integral or
+string and names are strings, it collects both through the one
+``limit`` probe per frame and walks the chains in Python with the
+distributed loop's bag semantics, returning a ``local_frame``. A walk
+whose rows would pass the bound falls back to the distributed loop.
+``recursive_expand`` has no driver path: its callers join names onto the
+closure, and those joins, not the loop's jobs, set its cost.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
+
+from etl_dag_spark.operators.adaptive import collect_if_small, local_frame, on_driver
+
+# nodes, edges and the chains walked on the driver are each at most
+# this many rows
+_DRIVER_MAX_ROWS = 500_000
 
 # Frontier frames persisted by the iterative operators. They must stay
 # cached until the caller MATERIALIZES the returned union (unpersisting
@@ -112,7 +131,14 @@ def ancestor_chain(
     :func:`recursive_expand`'s — skip the per-iteration emptiness probe
     while ``iteration < min_depth`` when chains are known at least that
     long. A wrong hint only joins empty frames (no rows change).
+
+    ADAPTIVE (module docstring): small inputs walk the same loop on the
+    driver (:func:`_driver_chains`); the two paths return the same rows,
+    pinned in tests/test_hierarchy.py.
     """
+    chains = _driver_chains(nodes, edges, sep, max_iter, min_depth)
+    if chains is not None:
+        return chains
     parents = edges.join(nodes, edges["parent"] == nodes["id"]).select(
         F.col("child").alias("p_child"),
         F.col("parent").alias("p_parent"),
@@ -162,3 +188,85 @@ def ancestor_chain(
     for part in done_parts[1:]:
         out = out.unionByName(part)
     return out
+
+
+def _key_family(dtype) -> str | None:
+    """The id types whose Spark equality is Python equality."""
+    if isinstance(dtype, IntegralType):
+        return "integral"
+    if dtype == StringType():  # the default (binary) collation only
+        return "string"
+    return None
+
+
+def _driver_chains(
+    nodes: DataFrame, edges: DataFrame, sep: str, max_iter: int, min_depth: int
+) -> DataFrame | None:
+    """:func:`ancestor_chain`'s loop walked in Python over collected
+    nodes and edges, or None when the gate sends it to the distributed
+    loop. Every step mirrors a distributed one: ``parents`` is the inner
+    ``edges ⋈ nodes`` join (duplicate rows multiply, NULL keys never
+    match), a state with no parent row finishes, ``concat`` yields NULL
+    if either name is NULL, and ``max_iter`` raises the same error."""
+    id_t = nodes.schema["id"].dataType
+    family = _key_family(id_t)
+    if (
+        family is None
+        or _key_family(edges.schema["child"].dataType) != family
+        or _key_family(edges.schema["parent"].dataType) != family
+        or nodes.schema["name"].dataType != StringType()
+    ):
+        return None
+    op = "ancestor_chain"
+    node_rows = collect_if_small(op, nodes.select("id", "name"), _DRIVER_MAX_ROWS)
+    if node_rows is None:
+        return None
+    edge_rows = collect_if_small(op, edges.select("child", "parent"), _DRIVER_MAX_ROWS)
+    if edge_rows is None:
+        return None
+    ids, names = node_rows["id"].to_pylist(), node_rows["name"].to_pylist()
+    names_of = defaultdict(list)
+    for i, name in zip(ids, names):
+        if i is not None:
+            names_of[i].append(name)
+    # the rows the walk holds (the parents join, then the chains) are
+    # checked against the bound as they grow, so a fan-out from
+    # duplicated rows falls back before it is built
+    parents = defaultdict(list)
+    held = 0
+    for child, parent in zip(edge_rows["child"].to_pylist(), edge_rows["parent"].to_pylist()):
+        if child is not None and parent in names_of:
+            parents[child].extend((parent, name) for name in names_of[parent])
+            held += len(names_of[parent])
+            if held > _DRIVER_MAX_ROWS:
+                on_driver(op, held, _DRIVER_MAX_ROWS)  # logs the fallback
+                return None
+    state = [(i, name, i, 1) for i, name in zip(ids, names)]
+    done: list[tuple] = []
+    for it in range(max_iter):
+        ongoing = []
+        for node_id, chain, cursor, depth in state:
+            hops = parents.get(cursor, ())
+            if not hops:
+                done.append((node_id, chain, depth))
+            for parent, name in hops:
+                link = None if chain is None or name is None else chain + sep + name
+                ongoing.append((node_id, link, parent, depth + 1))
+            if held + len(done) + len(ongoing) > _DRIVER_MAX_ROWS:
+                on_driver(op, held + len(done) + len(ongoing), _DRIVER_MAX_ROWS)
+                return None
+        if it >= min_depth and not ongoing:
+            break
+        state = ongoing
+    else:
+        raise RuntimeError(f"chain deeper than max_iter={max_iter} (cycle?)")
+    node_ids, chains, depths = zip(*done) if done else ((), (), ())
+    return local_frame(
+        nodes.sparkSession,
+        {
+            "node_id": pa.array(node_ids, node_rows.schema.field("id").type),
+            "chain": pa.array(chains, pa.string()),
+            "depth": pa.array(depths, pa.int32()),
+        },
+        f"node_id {id_t.simpleString()}, chain string, depth int",
+    )

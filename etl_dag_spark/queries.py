@@ -18,6 +18,7 @@ Portability rules that make value-hash equality hold between engines:
 from __future__ import annotations
 
 from collections.abc import Callable
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -417,7 +418,7 @@ def olap_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-class pricing summary: single scan, map-side partial
     aggregation, 6 measures in one pass."""
     li = load_table(spark, sf_dir, "lineitem")
-    filtered = li.where(F.date_format("l_shipdate", "yyyy-MM-dd") <= "2000-12-01")
+    filtered = li.where(F.to_date("l_shipdate") <= F.lit(date(2000, 12, 1)))
     cnt = F.count(F.lit(1))
     return filtered.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum("l_quantity").alias("sum_qty"),
@@ -456,11 +457,14 @@ def olap_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The filtered customer side scales with SF (unbounded, no hint);
     top-10 is TakeOrderedAndProject."""
     c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    # typed date predicates select the rows the oracle's formatted-string
+    # ones do (4-digit years compare in date order) without formatting
+    # a string per scanned row
     o = load_table(spark, sf_dir, "orders").where(
-        F.date_format("o_orderdate", "yyyy-MM-dd") < "1997-01-01"
+        F.to_date("o_orderdate") < F.lit(date(1997, 1, 1))
     ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").where(
-        F.date_format("l_shipdate", "yyyy-MM-dd") > "1997-01-01"
+        F.to_date("l_shipdate") > F.lit(date(1997, 1, 1))
     ).select("l_orderkey", star.revenue_cents().alias("rc"))
     return (
         joins.join_dim(o, c, F.col("o_custkey") == F.col("c_custkey"), bounded=False)
@@ -3958,8 +3962,8 @@ def olap_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so THEY are the broadcast side, never the SF-scaled supplier
     table."""
     li = load_table(spark, sf_dir, "lineitem").where(
-        (F.date_format("l_shipdate", "yyyy-MM-dd") >= "1996-01-01")
-        & (F.date_format("l_shipdate", "yyyy-MM-dd") < "1996-04-01")
+        (F.to_date("l_shipdate") >= F.lit(date(1996, 1, 1)))
+        & (F.to_date("l_shipdate") < F.lit(date(1996, 4, 1)))
     ).select("l_suppkey", star.revenue_cents().alias("rc"))
     rev = li.groupBy("l_suppkey").agg(F.sum("rc").alias("total_cents"))
     mx = rev.agg(F.max("total_cents").alias("__mx"))

@@ -81,6 +81,32 @@ def test_pagerank_parallel_edges_fold(spark):
         assert a[v] == pytest.approx(b[v], abs=1e-12)
 
 
+def test_pagerank_driver_result_ignores_partitioning(spark, caplog):
+    """The driver solve sorts its collected edges, so its float sums
+    accumulate in one order: the ranks are the same bits whatever order
+    the folded edge list arrives in (shuffle partitions 1 vs 7)."""
+    import logging
+
+    from etl_dag_spark.operators import adaptive
+
+    rng = np.random.default_rng(7)
+    pairs = {(int(s), int(d)) for s, d in rng.integers(0, 40, size=(400, 2))}
+    edges = [(f"n{s}", f"n{d}", float(w)) for (s, d), w in zip(sorted(pairs), rng.random(len(pairs)))]
+    caplog.set_level(logging.DEBUG, logger=adaptive.__name__)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    runs = []
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set(key, parts)
+            runs.append({v: r.hex() for v, r in _run(spark, edges, n_iter=10).items()})
+    finally:
+        spark.conf.set(key, prev)
+    assert runs[0] == runs[1]
+    branches = [r.args[:2] for r in caplog.records if r.name == adaptive.__name__]
+    assert branches == [("pagerank", "driver")] * 2
+
+
 def test_pagerank_empty_edges(spark):
     empty = spark.createDataFrame([], "src string, dst string, w double")
     assert pagerank(empty, weight_col="w").count() == 0

@@ -96,3 +96,62 @@ def test_cycle_detection_raises(spark):
     edges = spark.createDataFrame([(1, 2), (2, 1)], "child int, parent int")
     with pytest.raises(RuntimeError, match="max_iter"):
         recursive_expand(nodes, edges, max_iter=5)
+
+
+# the reference set plus the degenerate rows whose bag semantics the
+# driver walk must reproduce: a duplicated parent edge (Jack's chain
+# twice), an edge to a parent missing from nodes (Kim is a root), a NULL
+# name (Lee's chain and Max's, which passes through Lee, are NULL), a
+# NULL id (Ned finishes at once) and an edge with a NULL child
+EXTRA_NODES = [(11, "Kim"), (12, None), (13, "Max"), (None, "Ned")]
+EXTRA_EDGES = [(10, 7), (11, 99), (12, 1), (13, 12), (None, 1)]
+
+
+@pytest.mark.parametrize("min_depth", [0, 6])
+def test_ancestor_chain_driver_walk_equals_distributed_loop(spark, both_paths, min_depth):
+    nodes = spark.createDataFrame(
+        [(i, n) for i, n, _ in EMPLOYEES] + EXTRA_NODES, "id int, name string"
+    )
+    edges = spark.createDataFrame(
+        [(i, m) for i, _, m in EMPLOYEES if m is not None] + EXTRA_EDGES,
+        "child int, parent int",
+    )
+
+    def rows():
+        got = ancestor_chain(nodes, edges, sep=" -> ", min_depth=min_depth)
+        return sorted(map(tuple, got.collect()), key=repr)
+
+    driver, distributed = both_paths(rows, ["ancestor_chain"])
+    assert driver == distributed
+    assert len(driver) == 15  # 10 reference chains, Jack's twice, 4 extra nodes
+    assert (None, "Ned", 1) in driver and (11, "Kim", 1) in driver
+    assert (13, None, 3) in driver
+
+
+def test_ancestor_chain_cycle_raises_on_both_paths(spark, both_paths):
+    nodes = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "child int, parent int")
+
+    def error():
+        with pytest.raises(RuntimeError, match="max_iter") as exc:
+            ancestor_chain(nodes, edges, max_iter=5)
+        return str(exc.value)
+
+    driver, distributed = both_paths(error, ["ancestor_chain"])
+    assert driver == distributed
+
+
+def test_ancestor_chain_walk_past_the_bound_falls_back(spark, frames, caplog, monkeypatch):
+    """Nodes and edges pass the gate, but the walk outgrows the bound: the
+    distributed loop answers, and the records show both decisions."""
+    import logging
+
+    from etl_dag_spark.operators import adaptive, hierarchy
+
+    nodes, edges = frames
+    monkeypatch.setattr(hierarchy, "_DRIVER_MAX_ROWS", 12)
+    caplog.set_level(logging.DEBUG, logger=adaptive.__name__)
+    got = {r.node_id: r.depth for r in ancestor_chain(nodes, edges).collect()}
+    assert got == {i: DEPTH[i] + 1 for i in DEPTH}
+    branches = [r.args[1] for r in caplog.records if r.name == adaptive.__name__]
+    assert branches == ["driver", "driver", "distributed"]

@@ -5,6 +5,9 @@ single-element groups, duplicated keys)."""
 
 from __future__ import annotations
 
+import operator
+from datetime import date, timedelta
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -398,3 +401,64 @@ def test_split_raster_stream_rejects_trailing_junk(junk):
         assert got is None
     else:
         assert got is not None and got[0] == frame
+
+
+# the fact-scan filter cut days of the registry's date windows plus the
+# ends of Spark's date range
+_CUT_DAYS = ["0001-01-01", "1996-01-01", "1996-04-01", "1997-01-01", "2000-12-01", "9999-12-31"]
+
+
+def _stamps_around_cut_days() -> list[str | None]:
+    """The first and last microsecond of each cut day and of its
+    neighbours (where they exist), plus NULL."""
+    days = set()
+    for cut in _CUT_DAYS:
+        for shift in (-1, 0, 1):
+            try:
+                days.add(date.fromisoformat(cut) + timedelta(days=shift))
+            except OverflowError:
+                continue
+    stamps = [f"{d.isoformat()} {t}" for d in sorted(days) for t in ("00:00:00", "23:59:59.999999")]
+    return stamps + [None]
+
+
+@pytest.mark.parametrize(
+    "ts_type, tz",
+    [("timestamp_ntz", "UTC"), ("timestamp_ntz", "Pacific/Kiritimati"),
+     ("timestamp", "Pacific/Kiritimati"), ("timestamp", "America/Los_Angeles")],
+)
+def test_typed_date_predicate_selects_formatted_string_rows(spark, ts_type, tz):
+    """``to_date(c) <op> DATE 'd'`` keeps exactly the rows that
+    ``date_format(c, 'yyyy-MM-dd') <op> 'd'`` keeps (the form the DuckDB
+    oracles use), at every cut-day boundary and for NULL, for a
+    TIMESTAMP_NTZ column and for a TIMESTAMP one read in the session
+    time zone."""
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, tz)
+    try:
+        stamps = _stamps_around_cut_days()
+        df = spark.createDataFrame(list(enumerate(stamps)), "id int, s string").select(
+            "id", F.col("s").cast(ts_type).alias("ts")
+        )
+        ops = [operator.lt, operator.le, operator.gt, operator.ge]
+        checks = [
+            (
+                F.coalesce(op(F.date_format("ts", "yyyy-MM-dd"), cut), F.lit(False)),
+                F.coalesce(op(F.to_date("ts"), F.expr(f"DATE '{cut}'")), F.lit(False)),
+            )
+            for cut in _CUT_DAYS
+            for op in ops
+        ]
+        rows = df.select(
+            "id", F.col("ts").isNull().alias("null"), *[c for pair in checks for c in pair]
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert [r["null"] for r in rows].count(True) == 1  # every stamp parsed
+    for r in rows:
+        flags = list(r)[2:]
+        assert flags[0::2] == flags[1::2], stamps[r["id"]]
+    # the boundaries are crossed: each predicate keeps some rows, not all
+    kept = [sum(r[2 + 2 * i] for r in rows) for i in range(len(checks))]
+    assert all(0 < k < len(rows) - 1 for k in kept[4:-4])

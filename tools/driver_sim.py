@@ -58,8 +58,13 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     from pyspark.sql import SparkSession
 
+    # the console progress bar is off so that no `[Stage …]` bar shares
+    # a terminal line with a query's OK/FAIL line; it changes no result
     spark = (
-        SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
+        SparkSession.builder.master("local[8]")
+        .appName("driver-sim")
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
     from etl_dag_spark.session import quiet_benign_logs
