@@ -32,7 +32,15 @@ def collect_if_small(op: str, df: DataFrame, bound: int) -> pa.Table | None:
     """``df`` as an Arrow table if it has at most ``bound`` rows, else
     None. One ``limit(bound + 1)`` job answers the gate and delivers the
     rows in no set order: a consumer whose result depends on row order
-    (float sums) sorts them first."""
+    (float sums) sorts them first.
+
+    Each call compiles new generated classes when ``df`` is a union (the
+    hierarchy inputs of ``queries._hierarchy_frames``): the optimizer
+    pushes the limit into every union leg as a ``LocalLimitExec``, and
+    Spark names each one's row counter ``_limit_counter_<n>`` from a
+    JVM-wide sequence, so each leg's whole-stage code is new text that
+    Spark's codegen cache cannot serve (``bi_ancestor_chain``: 10 classes
+    per call)."""
     if FORCE_DISTRIBUTED:
         on_driver(op, None, bound)
         return None

@@ -1,4 +1,7 @@
-"""quiet_benign_logs: the filter must drop EXACTLY the benign
+"""get_spark's codegen cache must hold a repeated query mix: a second
+round of the same queries compiles no generated class.
+
+quiet_benign_logs: the filter must drop EXACTLY the benign
 accumulator-teardown message class and nothing else (ADVICE r9: the
 old implementation raised the whole DAGScheduler logger to FATAL,
 silencing real stage-failure diagnostics from err.log).
@@ -13,6 +16,21 @@ from __future__ import annotations
 
 import subprocess
 import sys
+
+from tests.conftest import SF_DIR
+
+# perfbench's bi_olap ops without bi_ancestor_chain, whose collect probe
+# compiles new classes on every call (operators/adaptive.py::collect_if_small)
+_REPEATED_OPS = [
+    "bi_revenue_by_category",
+    "bi_top_customers",
+    "bi_monthly_trend",
+    "bi_customers_no_purchase",
+    "bi_hierarchy_levels",
+    "olap_nation_pagerank",
+    "olap_trade_reach",
+    "olap_shipping_priority",
+]
 
 _PROBE = r"""
 from etl_dag_spark.session import get_spark, quiet_benign_logs
@@ -65,3 +83,26 @@ def test_quiet_benign_logs_config_shape(spark):
     # and the level was NOT forced to FATAL — ERROR/WARN still pass
     assert str(lc.getLevel()) != "FATAL"
     assert lc.getFilter() is not None
+
+
+def test_codegen_cache_holds_a_repeated_query_mix(spark):
+    """The eight ops cycle through about 134 generated classes, more than
+    Spark's default 100-entry cache: with it the second round recompiled
+    125 of them."""
+    from etl_dag_spark.operators.hierarchy import release_persisted
+    from etl_dag_spark.queries import SPARK_QUERIES
+
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_round() -> int:
+        before = compiles.getCount()
+        for name in _REPEATED_OPS:
+            try:
+                SPARK_QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            finally:
+                release_persisted()
+        return compiles.getCount() - before
+
+    one_round()
+    assert one_round() == 0

@@ -8,9 +8,17 @@ cluster pays per query — the r15 optimization target — and this output
 is the checkable artifact for "fewer jobs" claims (committed under
 plans/r15/).
 
-Usage: python tools/profile_jobs.py [name ...]   (default: all)
+``build_compiles`` / ``exec_compiles`` count the generated classes Janino
+compiled in each phase: the change of Spark's
+``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram count, one driver
+read per phase, no job. A class served from Spark's codegen cache is not
+counted, so naming the same queries twice shows, in the second listing,
+what each query recompiles on every call (plans/r16/compiles_*.jsonl).
+
+Usage: python tools/profile_jobs.py [name ...]   (default: all; a name may repeat)
 Output: one JSON line per query to stdout:
-  {"name":..., "build_sec":..., "exec_sec":..., "jobs":..., "stages":..., "tasks":...}
+  {"name":..., "build_sec":..., "exec_sec":..., "jobs":..., "stages":..., "tasks":...,
+   "build_compiles":..., "exec_compiles":...}
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ def main() -> None:
     names = sys.argv[1:] or sorted(SPARK_QUERIES)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    compile_time = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     # warm codegen/JVM once
     SPARK_QUERIES["bi_revenue_by_category"](spark, sf_dir).write.format("noop").mode(
@@ -60,19 +69,23 @@ def main() -> None:
                     tasks += si.numTasks
         return len(jobs), stages, tasks
 
-    for name in names:
+    for i, name in enumerate(names):
         fn = SPARK_QUERIES[name]
-        gb = f"build:{name}"
+        # the listing index keeps a repeated name's groups apart
+        gb = f"build:{i}:{name}"
         sc.setJobGroup(gb, gb)
+        c0 = compile_time.getCount()
         t0 = time.time()
         df = fn(spark, sf_dir)
         t1 = time.time()
+        c1 = compile_time.getCount()
         bj, bs, bt = counts(gb)
-        ge = f"exec:{name}"
+        ge = f"exec:{i}:{name}"
         sc.setJobGroup(ge, ge)
         t2 = time.time()
         df.write.format("noop").mode("overwrite").save()
         t3 = time.time()
+        c2 = compile_time.getCount()
         ej, es, et = counts(ge)
         sc.setJobGroup(None, None)
         release_persisted()
@@ -88,6 +101,8 @@ def main() -> None:
                     "jobs": bj + ej,
                     "stages": bs + es,
                     "tasks": bt + et,
+                    "build_compiles": c1 - c0,
+                    "exec_compiles": c2 - c1,
                 }
             ),
             flush=True,
