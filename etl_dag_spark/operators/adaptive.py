@@ -34,13 +34,15 @@ def collect_if_small(op: str, df: DataFrame, bound: int) -> pa.Table | None:
     rows in no set order: a consumer whose result depends on row order
     (float sums) sorts them first.
 
-    Each call compiles new generated classes when ``df`` is a union (the
-    hierarchy inputs of ``queries._hierarchy_frames``): the optimizer
-    pushes the limit into every union leg as a ``LocalLimitExec``, and
-    Spark names each one's row counter ``_limit_counter_<n>`` from a
-    JVM-wide sequence, so each leg's whole-stage code is new text that
-    Spark's codegen cache cannot serve (``bi_ancestor_chain``: 10 classes
-    per call)."""
+    Over a union, the optimizer pushes the limit into every leg as a
+    ``LocalLimitExec`` whose row counter Spark names
+    ``_limit_counter_<n>`` from a JVM-wide sequence, so each leg's
+    whole-stage code is new text the codegen cache cannot serve and every
+    call compiles it again. A caller probing a union coalesces it to one
+    partition first, which keeps the limit above the union
+    (``hierarchy._probe``). This function does not do that for every
+    gate: ``coalesce(1)`` over a heavy last stage (an aggregate or a
+    join) would run that stage in one task."""
     if FORCE_DISTRIBUTED:
         on_driver(op, None, bound)
         return None

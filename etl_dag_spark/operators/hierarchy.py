@@ -13,30 +13,35 @@ detected from the frontier's count — an aggregate, never data to the
 driver. Total work is O(edges × depth); depth for org charts and
 region/nation/customer trees is small and bounded by ``max_iter``.
 
-``ancestor_chain`` is gated (``operators/adaptive.py``): when nodes and
+``hierarchy_levels`` (the closure with both ends' names) and
+``ancestor_chain`` are gated (``operators/adaptive.py``): when nodes and
 edges each have at most ``_DRIVER_MAX_ROWS`` rows, ids are integral or
-string and names are strings, it collects both through the one
-``limit`` probe per frame and walks the chains in Python with the
-distributed loop's bag semantics, returning a ``local_frame``. A walk
-whose rows would pass the bound falls back to the distributed loop.
-``recursive_expand`` has no driver path: its callers join names onto the
-closure, and those joins, not the loop's jobs, set its cost.
+string and names are strings, both frames come to the driver through
+one ``limit`` probe each, run as two concurrent jobs (:func:`_probe`),
+and the distributed loop's own steps run there as Arrow (Acero) joins,
+which have Spark's bag semantics: NULL keys never match and duplicated
+keys multiply. The result is a ``local_frame``. Each join's output rows are predicted from
+its key counts before it is built, and a solve whose held rows would
+pass the bound falls back to the distributed loop.
+``recursive_expand`` alone has no driver path.
 """
 
 from __future__ import annotations
 
-from collections import defaultdict
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StringType
+from pyspark.util import inheritable_thread_target
 
 from etl_dag_spark.operators.adaptive import collect_if_small, local_frame, on_driver
 
-# nodes, edges and the chains walked on the driver are each at most
-# this many rows
+# nodes and edges are each at most this many rows on the driver, and so
+# are the rows a driver solve holds at once
 _DRIVER_MAX_ROWS = 500_000
 
 # Frontier frames persisted by the iterative operators. They must stay
@@ -113,6 +118,32 @@ def recursive_expand(
     return out
 
 
+def hierarchy_levels(
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 30, min_depth: int = 0
+) -> DataFrame:
+    """:func:`recursive_expand` with each end's name joined on (the
+    reference's first recursive query, names included).
+
+    nodes: (id, name), edges: (child, parent) →
+    (ancestor_id, ancestor_name, node_id, node_name, level)
+
+    ADAPTIVE (module docstring): small inputs run the closure and both
+    name joins on the driver (:func:`_driver_levels`); the two paths
+    return the same rows, pinned in tests/test_hierarchy.py.
+    """
+    levels = _driver_levels(nodes, edges, max_iter, min_depth)
+    if levels is not None:
+        return levels
+    closure = recursive_expand(nodes.select("id"), edges, max_iter, min_depth)
+    na = nodes.select(F.col("id").alias("ancestor_id"), F.col("name").alias("ancestor_name"))
+    nn = nodes.select(F.col("id").alias("node_id"), F.col("name").alias("node_name"))
+    return (
+        closure.join(na, "ancestor_id")
+        .join(nn, "node_id")
+        .select("ancestor_id", "ancestor_name", "node_id", "node_name", "level")
+    )
+
+
 def ancestor_chain(
     nodes: DataFrame,
     edges: DataFrame,
@@ -132,7 +163,7 @@ def ancestor_chain(
     while ``iteration < min_depth`` when chains are known at least that
     long. A wrong hint only joins empty frames (no rows change).
 
-    ADAPTIVE (module docstring): small inputs walk the same loop on the
+    ADAPTIVE (module docstring): small inputs run the same loop on the
     driver (:func:`_driver_chains`); the two paths return the same rows,
     pinned in tests/test_hierarchy.py.
     """
@@ -190,8 +221,12 @@ def ancestor_chain(
     return out
 
 
+class _PastBound(Exception):
+    """A driver solve would hold more rows than the bound."""
+
+
 def _key_family(dtype) -> str | None:
-    """The id types whose Spark equality is Python equality."""
+    """The id types whose Spark equality is Arrow's join equality."""
     if isinstance(dtype, IntegralType):
         return "integral"
     if dtype == StringType():  # the default (binary) collation only
@@ -199,17 +234,16 @@ def _key_family(dtype) -> str | None:
     return None
 
 
-def _driver_chains(
-    nodes: DataFrame, edges: DataFrame, sep: str, max_iter: int, min_depth: int
-) -> DataFrame | None:
-    """:func:`ancestor_chain`'s loop walked in Python over collected
-    nodes and edges, or None when the gate sends it to the distributed
-    loop. Every step mirrors a distributed one: ``parents`` is the inner
-    ``edges ⋈ nodes`` join (duplicate rows multiply, NULL keys never
-    match), a state with no parent row finishes, ``concat`` yields NULL
-    if either name is NULL, and ``max_iter`` raises the same error."""
-    id_t = nodes.schema["id"].dataType
-    family = _key_family(id_t)
+def _probe(op: str, nodes: DataFrame, edges: DataFrame) -> tuple[pa.Table, pa.Table] | None:
+    """nodes ``(id, name)`` and edges ``(child, parent)`` as Arrow tables
+    whose three keys share one type, or None when the gate sends ``op``
+    to its distributed loop: ids not all integral or all strings, names
+    not strings, or a frame over the bound. Each frame is coalesced to
+    one partition before its ``limit`` probe, which keeps the limit out
+    of the legs of a union input: the probe stays one job and compiles
+    no new class per call (``adaptive.collect_if_small``). The two
+    probes run at once, so the caller waits for one job's latency."""
+    family = _key_family(nodes.schema["id"].dataType)
     if (
         family is None
         or _key_family(edges.schema["child"].dataType) != family
@@ -217,56 +251,172 @@ def _driver_chains(
         or nodes.schema["name"].dataType != StringType()
     ):
         return None
-    op = "ancestor_chain"
-    node_rows = collect_if_small(op, nodes.select("id", "name"), _DRIVER_MAX_ROWS)
-    if node_rows is None:
+    key_t = pa.int64() if family == "integral" else pa.large_string()
+
+    # each pool thread carries the caller's Spark local properties (its
+    # job group) and job tags
+    @inheritable_thread_target(nodes.sparkSession)
+    def probe(df: DataFrame) -> pa.Table | None:
+        rows = collect_if_small(op, df.coalesce(1), _DRIVER_MAX_ROWS)
+        if rows is None:
+            return None
+        return rows.cast(pa.schema([
+            pa.field(f.name, f.type if f.name == "name" else key_t) for f in rows.schema
+        ]))
+
+    with ThreadPoolExecutor(2) as pool:
+        node_rows, edge_rows = pool.map(
+            probe, (nodes.select("id", "name"), edges.select("child", "parent"))
+        )
+    if node_rows is None or edge_rows is None:
         return None
-    edge_rows = collect_if_small(op, edges.select("child", "parent"), _DRIVER_MAX_ROWS)
-    if edge_rows is None:
+    return node_rows, edge_rows
+
+
+def _join(
+    op: str, held: int, left: pa.Table, lkey: str, right: pa.Table, rkey: str,
+    outer: bool = False,
+) -> pa.Table:
+    """``left ⋈ right`` on ``lkey = rkey`` (left outer when ``outer``),
+    built only if ``held`` rows plus its own stay within the bound; past
+    it, logs the fallback and raises :class:`_PastBound`. Its rows are
+    predicted first from the two sides' key counts (a NULL key matches
+    nothing), so a fan-out from duplicated keys is never built."""
+
+    def counts(t: pa.Table, key: str) -> pa.Table:
+        c = t.group_by(key).aggregate([([], "count_all")])
+        return pa.table({"k": c[key], "n": c["count_all"]})
+
+    matched = counts(left, lkey).join(
+        counts(right, rkey), "k", join_type="inner", right_suffix="_r"
+    )
+    rows = pc.sum(pc.multiply(matched["n"], matched["n_r"])).as_py() or 0
+    if outer:
+        rows += left.num_rows - (pc.sum(matched["n"]).as_py() or 0)
+    if held + rows > _DRIVER_MAX_ROWS:
+        on_driver(op, held + rows, _DRIVER_MAX_ROWS)  # logs the fallback
+        raise _PastBound
+    return left.join(right, lkey, rkey, join_type="left outer" if outer else "inner")
+
+
+def _driver_levels(
+    nodes: DataFrame, edges: DataFrame, max_iter: int, min_depth: int
+) -> DataFrame | None:
+    """:func:`hierarchy_levels` on the driver, or None when the gate
+    sends it distributed. The closure is :func:`recursive_expand`'s
+    loop (every node row is its own ancestor at level 0, each level an
+    inner ``frontier ⋈ edges`` join, the same ``min_depth`` and
+    ``max_iter`` behavior), then the two inner name joins."""
+    op = "hierarchy_levels"
+    probed = _probe(op, nodes, edges)
+    if probed is None:
         return None
-    ids, names = node_rows["id"].to_pylist(), node_rows["name"].to_pylist()
-    names_of = defaultdict(list)
-    for i, name in zip(ids, names):
-        if i is not None:
-            names_of[i].append(name)
-    # the rows the walk holds (the parents join, then the chains) are
-    # checked against the bound as they grow, so a fan-out from
-    # duplicated rows falls back before it is built
-    parents = defaultdict(list)
-    held = 0
-    for child, parent in zip(edge_rows["child"].to_pylist(), edge_rows["parent"].to_pylist()):
-        if child is not None and parent in names_of:
-            parents[child].extend((parent, name) for name in names_of[parent])
-            held += len(names_of[parent])
-            if held > _DRIVER_MAX_ROWS:
-                on_driver(op, held, _DRIVER_MAX_ROWS)  # logs the fallback
-                return None
-    state = [(i, name, i, 1) for i, name in zip(ids, names)]
-    done: list[tuple] = []
-    for it in range(max_iter):
-        ongoing = []
-        for node_id, chain, cursor, depth in state:
-            hops = parents.get(cursor, ())
-            if not hops:
-                done.append((node_id, chain, depth))
-            for parent, name in hops:
-                link = None if chain is None or name is None else chain + sep + name
-                ongoing.append((node_id, link, parent, depth + 1))
-            if held + len(done) + len(ongoing) > _DRIVER_MAX_ROWS:
-                on_driver(op, held + len(done) + len(ongoing), _DRIVER_MAX_ROWS)
-                return None
-        if it >= min_depth and not ongoing:
-            break
-        state = ongoing
-    else:
-        raise RuntimeError(f"chain deeper than max_iter={max_iter} (cycle?)")
-    node_ids, chains, depths = zip(*done) if done else ((), (), ())
+    node_rows, edge_rows = probed
+    frontier = pa.table({
+        "ancestor_id": node_rows["id"],
+        "node_id": node_rows["id"],
+        "level": pa.repeat(pa.scalar(0, pa.int32()), node_rows.num_rows),
+    })
+    parts = [frontier]
+    held = frontier.num_rows
+    try:
+        for level in range(max_iter):
+            step = _join(op, held, frontier, "node_id", edge_rows, "parent")
+            nxt = pa.table({
+                "ancestor_id": step["ancestor_id"],
+                "node_id": step["child"],
+                "level": pc.add(step["level"], pa.scalar(1, pa.int32())),
+            })
+            if level >= min_depth and nxt.num_rows == 0:
+                break
+            parts.append(nxt)
+            held += nxt.num_rows
+            frontier = nxt
+        else:
+            raise RuntimeError(f"hierarchy deeper than max_iter={max_iter} (cycle?)")
+        closure = pa.concat_tables(parts)
+        named = _join(
+            op, held, closure, "ancestor_id",
+            node_rows.rename_columns(["id", "ancestor_name"]), "id",
+        )
+        named = _join(
+            op, named.num_rows, named, "node_id",
+            node_rows.rename_columns(["id", "node_name"]), "id",
+        )
+    except _PastBound:
+        return None
+    id_t = nodes.schema["id"].dataType
+    # node_id has the type of the distributed closure's union of ids and children
+    node_t = (
+        nodes.select("id").unionByName(edges.select(F.col("child").alias("id")))
+        .schema["id"].dataType
+    )
     return local_frame(
         nodes.sparkSession,
         {
-            "node_id": pa.array(node_ids, node_rows.schema.field("id").type),
-            "chain": pa.array(chains, pa.string()),
-            "depth": pa.array(depths, pa.int32()),
+            "ancestor_id": named["ancestor_id"],
+            "ancestor_name": named["ancestor_name"],
+            "node_id": named["node_id"],
+            "node_name": named["node_name"],
+            "level": named["level"],
+        },
+        f"ancestor_id {id_t.simpleString()}, ancestor_name string,"
+        f" node_id {node_t.simpleString()}, node_name string, level int",
+    )
+
+
+def _driver_chains(
+    nodes: DataFrame, edges: DataFrame, sep: str, max_iter: int, min_depth: int
+) -> DataFrame | None:
+    """:func:`ancestor_chain` on the driver, or None when the gate sends
+    it distributed. Every step is a distributed one: ``parents`` is the
+    inner ``edges ⋈ nodes`` join, each step a left outer join of the
+    state on ``cursor``, a state with no parent row finishes, the
+    concatenation is NULL if either name is, and ``max_iter`` raises the
+    same error. The parents join and the chains count as held rows."""
+    op = "ancestor_chain"
+    probed = _probe(op, nodes, edges)
+    if probed is None:
+        return None
+    node_rows, edge_rows = probed
+    try:
+        parents = _join(op, 0, edge_rows, "parent", node_rows, "id")
+        state = pa.table({
+            "node_id": node_rows["id"],
+            "chain": node_rows["name"],
+            "cursor": node_rows["id"],
+            "depth": pa.repeat(pa.scalar(1, pa.int32()), node_rows.num_rows),
+        })
+        held = parents.num_rows
+        done = []
+        for it in range(max_iter):
+            step = _join(op, held, state, "cursor", parents, "child", outer=True)
+            ends = pc.is_null(step["parent"])
+            done.append(step.filter(ends).select(["node_id", "chain", "depth"]))
+            held += done[-1].num_rows
+            ongoing = step.filter(pc.invert(ends))
+            if it >= min_depth and ongoing.num_rows == 0:
+                break
+            state = pa.table({
+                "node_id": ongoing["node_id"],
+                "chain": pc.binary_join_element_wise(
+                    ongoing["chain"], ongoing["name"], sep, null_handling="emit_null"
+                ),
+                "cursor": ongoing["parent"],
+                "depth": pc.add(ongoing["depth"], pa.scalar(1, pa.int32())),
+            })
+        else:
+            raise RuntimeError(f"chain deeper than max_iter={max_iter} (cycle?)")
+    except _PastBound:
+        return None
+    chains = pa.concat_tables(done)
+    id_t = nodes.schema["id"].dataType
+    return local_frame(
+        nodes.sparkSession,
+        {
+            "node_id": chains["node_id"],
+            "chain": chains["chain"],
+            "depth": chains["depth"],
         },
         f"node_id {id_t.simpleString()}, chain string, depth int",
     )

@@ -52,7 +52,7 @@ from etl_dag_spark.operators import star
 from etl_dag_spark.operators.sketch import pos32_sql as sketch_pos_sql
 from etl_dag_spark.operators import validation as val
 from etl_dag_spark.operators import windows as win
-from etl_dag_spark.operators.hierarchy import ancestor_chain, recursive_expand
+from etl_dag_spark.operators.hierarchy import ancestor_chain, hierarchy_levels
 from etl_dag_spark.operators.multimodal import attach_binary_payload, extract_media_meta
 from etl_dag_spark.sources.tables import load_events, load_table
 
@@ -328,14 +328,7 @@ def bi_hierarchy_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes, edges = _hierarchy_frames(spark, sf_dir)
     # min_depth=2: region→nation→customer is always two edge levels —
     # skips two per-level emptiness probe jobs (safe hint; see operator)
-    closure = recursive_expand(nodes.select("id"), edges, min_depth=2)
-    na = nodes.select(F.col("id").alias("ancestor_id"), F.col("name").alias("ancestor_name"))
-    nn = nodes.select(F.col("id").alias("node_id"), F.col("name").alias("node_name"))
-    return (
-        closure.join(na, "ancestor_id")
-        .join(nn, "node_id")
-        .select("ancestor_id", "ancestor_name", "node_id", "node_name", "level")
-    )
+    return hierarchy_levels(nodes, edges, min_depth=2)
 
 
 @register(
@@ -7228,7 +7221,11 @@ def _nation_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n1 = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
     n2 = n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation"))
-    return (
+    # fold by nation KEY first, so the name joins, the filter and the
+    # name grouping run on at most nations² rows; exact: integer sums
+    # regroup exactly, a name join's multiplicity scales a key pair's
+    # sum as it scaled each of its rows, and NULL keys drop either way
+    by_key = (
         joins.join_dim(
             joins.join_dim(
                 li.join(o, F.col("l_orderkey") == F.col("o_orderkey")),
@@ -7236,13 +7233,17 @@ def _nation_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             c, F.col("o_custkey") == F.col("c_custkey"), bounded=False,
         )
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
+        .groupBy("s_nationkey", "c_nationkey")
+        .agg(F.sum("rc").alias("w"))
+    )
+    return (
+        by_key.join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
         .where(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy(
             F.col("supp_nation").alias("src"), F.col("cust_nation").alias("dst")
         )
-        .agg(F.sum("rc").alias("w"))
+        .agg(F.sum("w").alias("w"))
     )
 
 

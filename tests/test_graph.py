@@ -196,3 +196,57 @@ def test_bfs_distances_multi_source(spark):
     sources = spark.createDataFrame([("p",), ("q",)], "node string")
     got = {r.node: r.dist for r in bfs_distances(edges, sources).collect()}
     assert got == {"p": 0, "q": 0, "m": 1, "n": 1}
+
+
+def test_nation_trade_edges_fold_by_key_equals_fold_by_name(spark, tmp_path):
+    """``_nation_trade_edges`` sums by nation key before the name joins;
+    on a nation table where two keys share a name, one key appears twice
+    and one name is NULL, it returns the rows of the fold over named
+    line rows."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from etl_dag_spark.operators import star
+    from etl_dag_spark.queries import _nation_trade_edges
+    from etl_dag_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    for t in ("supplier", "customer", "orders", "lineitem"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    nation = pq.read_table(os.path.join(SF_DIR, "nation.parquet"))
+    keys = nation["n_nationkey"].to_pylist()
+    names = nation["n_name"].to_pylist()
+    names[keys.index(8)] = names[keys.index(3)]  # suppliers in both
+    names[keys.index(12)] = None
+    nation = nation.set_column(1, "n_name", pa.array(names, nation.schema.field("n_name").type))
+    nation = pa.concat_tables([nation, nation.filter(pa.compute.equal(nation["n_nationkey"], 13))])
+    pq.write_table(nation, tmp_path / "nation.parquet")
+    sf = str(tmp_path)
+
+    def load(t):
+        return load_table(spark, sf, t)
+
+    n = load("nation")
+    by_name = (
+        load("lineitem").join(load("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(load("supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(load("customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(n.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src")),
+              F.col("s_nationkey") == F.col("sk"))
+        .join(n.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst")),
+              F.col("c_nationkey") == F.col("ck"))
+        .where(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.sum(star.revenue_cents()).alias("w"))
+    )
+    got = _nation_trade_edges(spark, sf)
+    assert got.schema == by_name.schema
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, by_name.collect()))
+    assert not any(r[0] is None or r[1] is None or r[0] == r[1] for r in rows)
+    assert any(r[0] == names[keys.index(3)] for r in rows)
+    assert any(r[0] == "NATION_13" for r in rows)

@@ -8,7 +8,11 @@ from __future__ import annotations
 
 import pytest
 
-from etl_dag_spark.operators.hierarchy import ancestor_chain, recursive_expand
+from etl_dag_spark.operators.hierarchy import (
+    ancestor_chain,
+    hierarchy_levels,
+    recursive_expand,
+)
 
 # (EmployeeID, Name, ManagerID) — verbatim from the reference insert.
 EMPLOYEES = [
@@ -155,3 +159,145 @@ def test_ancestor_chain_walk_past_the_bound_falls_back(spark, frames, caplog, mo
     assert got == {i: DEPTH[i] + 1 for i in DEPTH}
     branches = [r.args[1] for r in caplog.records if r.name == adaptive.__name__]
     assert branches == ["driver", "driver", "distributed"]
+
+
+def test_ancestor_chain_driver_walk_keeps_multibyte_and_empty_names(spark, both_paths):
+    names = {1: "Zoë", 2: "", 3: "李雷", 4: "🚀 x", 5: ""}
+    nodes = spark.createDataFrame(list(names.items()), "id int, name string")
+    edges = spark.createDataFrame([(2, 1), (3, 2), (4, 3)], "child int, parent int")
+
+    def rows():
+        got = ancestor_chain(nodes, edges, sep=" → ")
+        return sorted(map(tuple, got.collect()))
+
+    driver, distributed = both_paths(rows, ["ancestor_chain"])
+    assert driver == distributed == [
+        (1, "Zoë", 1),
+        (2, " → Zoë", 2),
+        (3, "李雷 →  → Zoë", 3),
+        (4, "🚀 x → 李雷 →  → Zoë", 4),
+        (5, "", 1),
+    ]
+
+
+def _levels(nodes, edges, **kw):
+    """The schema and sorted rows of ``hierarchy_levels``."""
+    got = hierarchy_levels(nodes, edges, **kw)
+    return got.schema.simpleString(), sorted(map(tuple, got.collect()), key=repr)
+
+
+def _reference_levels() -> set[tuple]:
+    names = {i: n for i, n, _ in EMPLOYEES}
+    out = set()
+    for i, _, _ in EMPLOYEES:
+        out.add((i, names[i], i, names[i], 0))
+        for lvl, anc in enumerate(_ancestors(i), start=1):
+            out.add((anc, names[anc], i, names[i], lvl))
+    return out
+
+
+@pytest.mark.parametrize("min_depth", [0, 6])
+def test_hierarchy_levels_driver_solve_equals_distributed_loop(
+    spark, both_paths, frames, min_depth
+):
+    nodes, edges = frames
+    driver, distributed = both_paths(
+        lambda: _levels(nodes, edges, min_depth=min_depth), ["hierarchy_levels"]
+    )
+    assert driver == distributed
+    assert driver[0] == (
+        "struct<ancestor_id:int,ancestor_name:string,node_id:int,"
+        "node_name:string,level:int>"
+    )
+    assert len(driver[1]) == 29 and set(driver[1]) == _reference_levels()
+
+
+def test_hierarchy_levels_bag_semantics_on_both_paths(spark, both_paths):
+    """A duplicated node id (David twice) and a duplicated edge (Jack's)
+    multiply rows, an edge to a parent missing from nodes makes Kim a
+    root, a NULL id joins no name, a NULL name stays NULL and an edge
+    with a NULL child matches nothing."""
+    nodes = spark.createDataFrame(
+        [(i, n) for i, n, _ in EMPLOYEES]
+        + [(4, "David (again)"), (11, "Kim"), (12, None), (None, "Ned")],
+        "id int, name string",
+    )
+    edges = spark.createDataFrame(
+        [(i, m) for i, _, m in EMPLOYEES if m is not None]
+        + [(10, 7), (11, 99), (12, 1), (None, 1)],
+        "child int, parent int",
+    )
+    driver, distributed = both_paths(lambda: _levels(nodes, edges), ["hierarchy_levels"])
+    assert driver == distributed
+    rows = driver[1]
+    # David's self row: 2 seed rows × 2 ancestor names × 2 node names
+    assert sum(r[0] == 4 and r[2] == 4 for r in rows) == 8
+    # Jack under Grace and her ancestors: twice each
+    assert sum(r[0] == 7 and r[2] == 10 for r in rows) == 2
+    assert (11, "Kim", 11, "Kim", 0) in rows and not any(r[0] == 99 for r in rows)
+    assert (12, None, 12, None, 0) in rows and (1, "Alice (CEO)", 12, None, 1) in rows
+    assert not any(r[0] is None or r[2] is None for r in rows)
+
+
+def test_hierarchy_levels_string_and_mixed_width_ids(spark, both_paths):
+    nodes = spark.createDataFrame(
+        [("a", "root"), ("b", "mid"), ("c", "leaf"), ("é", "leaf 2")], "id string, name string"
+    )
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("é", "b")], "child string, parent string"
+    )
+    driver, distributed = both_paths(lambda: _levels(nodes, edges), ["hierarchy_levels"])
+    assert driver == distributed and len(driver[1]) == 4 + 3 + 2
+    assert ("a", "root", "é", "leaf 2", 2) in driver[1]
+
+    # int ids, bigint edges: node_id takes the wider type on both paths
+    nodes = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
+    edges = spark.createDataFrame([(2, 1)], "child bigint, parent bigint")
+    driver, distributed = both_paths(lambda: _levels(nodes, edges), ["hierarchy_levels"])
+    assert driver == distributed
+    assert driver[0].startswith("struct<ancestor_id:int,ancestor_name:string,node_id:bigint")
+
+
+def test_hierarchy_levels_cycle_raises_on_both_paths(spark, both_paths):
+    nodes = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "child int, parent int")
+
+    def error():
+        with pytest.raises(RuntimeError, match="max_iter") as exc:
+            hierarchy_levels(nodes, edges, max_iter=5)
+        return str(exc.value)
+
+    driver, distributed = both_paths(error, ["hierarchy_levels"])
+    assert driver == distributed
+
+
+def test_hierarchy_levels_past_the_bound_falls_back(spark, frames, caplog, monkeypatch):
+    """Nodes and edges pass the gate, but the closure would outgrow the
+    bound at its first level: the distributed loop answers."""
+    import logging
+
+    from etl_dag_spark.operators import adaptive, hierarchy
+
+    nodes, edges = frames
+    monkeypatch.setattr(hierarchy, "_DRIVER_MAX_ROWS", 12)
+    caplog.set_level(logging.DEBUG, logger=adaptive.__name__)
+    assert set(_levels(nodes, edges)[1]) == _reference_levels()
+    branches = [r.args[1] for r in caplog.records if r.name == adaptive.__name__]
+    assert branches == ["driver", "driver", "distributed"]
+
+
+def test_driver_probes_run_in_the_callers_job_group(spark, frames):
+    """The two probe jobs run on pool threads and still carry the
+    caller's job group, so per-group job counts see them."""
+    import uuid
+
+    nodes, edges = frames
+    sc = spark.sparkContext
+    group = f"hierarchy-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "probe inheritance")
+    try:
+        hierarchy_levels(nodes, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2

@@ -19,14 +19,14 @@ import sys
 
 from tests.conftest import SF_DIR
 
-# perfbench's bi_olap ops without bi_ancestor_chain, whose collect probe
-# compiles new classes on every call (operators/adaptive.py::collect_if_small)
+# perfbench's bi_olap ops
 _REPEATED_OPS = [
     "bi_revenue_by_category",
     "bi_top_customers",
     "bi_monthly_trend",
     "bi_customers_no_purchase",
     "bi_hierarchy_levels",
+    "bi_ancestor_chain",
     "olap_nation_pagerank",
     "olap_trade_reach",
     "olap_shipping_priority",
@@ -86,9 +86,9 @@ def test_quiet_benign_logs_config_shape(spark):
 
 
 def test_codegen_cache_holds_a_repeated_query_mix(spark):
-    """The eight ops cycle through about 134 generated classes, more than
+    """The nine ops cycle through about 120 generated classes, more than
     Spark's default 100-entry cache: with it the second round recompiled
-    125 of them."""
+    95 of them."""
     from etl_dag_spark.operators.hierarchy import release_persisted
     from etl_dag_spark.queries import SPARK_QUERIES
 

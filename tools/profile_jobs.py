@@ -15,10 +15,16 @@ read per phase, no job. A class served from Spark's codegen cache is not
 counted, so naming the same queries twice shows, in the second listing,
 what each query recompiles on every call (plans/r16/compiles_*.jsonl).
 
+``build_job_sec`` / ``exec_job_sec`` are the seconds in each phase during
+which at least one of its Spark jobs ran: the union of the jobs'
+submission-to-completion intervals in Spark's status store. A phase's
+``*_sec`` minus its ``*_job_sec`` is its time outside Spark jobs
+(planning, driver-side solves, collects).
+
 Usage: python tools/profile_jobs.py [name ...]   (default: all; a name may repeat)
 Output: one JSON line per query to stdout:
-  {"name":..., "build_sec":..., "exec_sec":..., "jobs":..., "stages":..., "tasks":...,
-   "build_compiles":..., "exec_compiles":...}
+  {"name":..., "build_sec":..., "exec_sec":..., "build_job_sec":..., "exec_job_sec":...,
+   "jobs":..., "stages":..., "tasks":..., "build_compiles":..., "exec_compiles":...}
 """
 
 from __future__ import annotations
@@ -54,10 +60,15 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    def counts(group: str) -> tuple[int, int, int]:
+    store = sc._jsc.sc().statusStore()
+    listener_bus = sc._jsc.sc().listenerBus()
+
+    def counts(group: str) -> tuple[int, int, int, float]:
+        listener_bus.waitUntilEmpty()  # the store has every job's end
         jobs = tracker.getJobIdsForGroup(group)
         stages = 0
         tasks = 0
+        spans = []
         for j in jobs:
             ji = tracker.getJobInfo(j)
             if ji is None:
@@ -67,7 +78,21 @@ def main() -> None:
                 if si is not None:
                     stages += 1
                     tasks += si.numTasks
-        return len(jobs), stages, tasks
+            jd = store.job(j)
+            if jd.submissionTime().isDefined() and jd.completionTime().isDefined():
+                spans.append(
+                    (jd.submissionTime().get().getTime(), jd.completionTime().get().getTime())
+                )
+        # union of the jobs' intervals, in ms
+        busy, end = 0, None
+        for start, stop in sorted(spans):
+            if end is None or start > end:
+                busy += stop - start
+                end = stop
+            elif stop > end:
+                busy += stop - end
+                end = stop
+        return len(jobs), stages, tasks, busy / 1000
 
     for i, name in enumerate(names):
         fn = SPARK_QUERIES[name]
@@ -79,14 +104,14 @@ def main() -> None:
         df = fn(spark, sf_dir)
         t1 = time.time()
         c1 = compile_time.getCount()
-        bj, bs, bt = counts(gb)
+        bj, bs, bt, bsec = counts(gb)
         ge = f"exec:{i}:{name}"
         sc.setJobGroup(ge, ge)
         t2 = time.time()
         df.write.format("noop").mode("overwrite").save()
         t3 = time.time()
         c2 = compile_time.getCount()
-        ej, es, et = counts(ge)
+        ej, es, et, esec = counts(ge)
         sc.setJobGroup(None, None)
         release_persisted()
         print(
@@ -96,6 +121,8 @@ def main() -> None:
                     "build_sec": round(t1 - t0, 3),
                     "exec_sec": round(t3 - t2, 3),
                     "total_sec": round((t1 - t0) + (t3 - t2), 3),
+                    "build_job_sec": round(bsec, 3),
+                    "exec_job_sec": round(esec, 3),
                     "build_jobs": bj,
                     "exec_jobs": ej,
                     "jobs": bj + ej,
